@@ -16,25 +16,12 @@ $bucket (boundary histograms), $setWindowFields (rank / documentNumber /
 shift and frame-bounded sum/avg/min/max/push/count windows), $densify /
 $fill (gap materialization + locf/constant fills), $facet, $graphLookup
 (bounded BFS), and terminal $out / $merge document-store writes.
-Supported expressions: field paths, $literal, arithmetic ($add $subtract
-$multiply $divide $mod $abs $ceil $floor $round $sqrt $pow $exp $ln),
-comparisons ($eq $ne $gt $gte $lt $lte $cmp), boolean ($and $or $not),
-conditionals ($cond $ifNull), strings ($concat $toUpper $toLower
-$strLenCP $substrCP $split $trim $ltrim $rtrim $indexOfCP $replaceAll
-$replaceOne $strcasecmp $toString), objects ($objectToArray /
-$arrayToObject over MAP-typed dynamic documents, $getField $setField
-$mergeObjects),
-sets ($setUnion $setIntersection $setDifference $setIsSubset $setEquals),
-dates ($year $month $dateToParts
-$dayOfMonth $hour $minute $second $dayOfWeek), arrays ($size
-$arrayElemAt $concatArrays $in), conversions ($toInt $toLong $toDouble
-$toDecimal $toBool $toDate), accumulators ($sum $avg $min $max $push
-$addToSet $first $last $count $stdDevPop $stdDevSamp, ranked $top
-$bottom $topN $bottomN, $median $percentile — discrete-exact by default,
-``approx_percentile`` production mode via ``percentile_accuracy``), window
-operators in $setWindowFields ($rank $denseRank $documentNumber $shift
-$derivative $integral $covariancePop $covarianceSamp + frame-bounded
-aggregates).
+Supported expressions: field paths, ``$$`` variables and every operator
+keyed in ``_EXPR_OPS`` — one entry per operator holding its compile
+function, its allowed dict-operand arguments and whether its
+``timezone`` argument is UTC-only.  Accumulators ($group, $bucket
+output): see ``_accumulator``; window operators: see
+``_stage_set_window_fields``.
 
 Determinism deviations (documented, deliberate):
 - ``$addToSet`` emits a *sorted* array (sets are unordered in Mongo; a
@@ -49,6 +36,11 @@ comparisons in query context are type-bracketed (null never satisfies
 from __future__ import annotations
 
 import contextvars
+import functools
+import operator
+import re
+from collections.abc import Callable
+from dataclasses import dataclass
 from typing import Any
 
 import pyspark.sql.functions as F
@@ -100,7 +92,8 @@ _STAGE_COLUMNS: contextvars.ContextVar[list[str] | None] = \
 def expr_to_col(expr, env: dict[str, Column] | None = None) -> Column:
     """Compile an aggregation expression (the ``$project``/``$group`` value
     language) to a Column.  ``env`` binds pipeline variables: ``$$this`` /
-    ``$$value`` inside $map/$filter/$reduce, or a named ``as`` binding."""
+    ``$$value`` inside $map/$filter/$reduce, or a named ``as`` binding.
+    Operator documents dispatch through :data:`_EXPR_OPS`."""
     if isinstance(expr, str) and expr.startswith("$$"):
         name, _, rest = expr[2:].partition(".")
         if env and name in env:
@@ -137,7 +130,12 @@ def expr_to_col(expr, env: dict[str, Column] | None = None) -> Column:
         (op, operand), = expr.items()
         if not op.startswith("$"):
             return F.struct(expr_to_col(operand, env).alias(op))
-        return _expr_op(op, operand, env)
+        spec = _EXPR_OPS.get(op)
+        if spec is not None:
+            _check_operand(op, operand, spec)
+        if spec is None or spec.compile is None:
+            raise _unsupported(op)
+        return spec.compile(op, operand, lambda x: expr_to_col(x, env), env)
     return F.lit(expr)
 
 
@@ -150,13 +148,11 @@ def _date_fmt(fmt: str) -> str:
     ``%V`` ISO-week requests as the literal text "%V" in every row).
     ``%%`` is the server's literal percent.
     """
-    import re as _re
-
     out = fmt.replace("%%", "\x00")
     for m, j in (("%Y", "yyyy"), ("%m", "MM"), ("%d", "dd"), ("%H", "HH"),
                  ("%M", "mm"), ("%S", "ss"), ("%L", "SSS"), ("%j", "DDD")):
         out = out.replace(m, j)
-    left = _re.search(r"%.?", out)
+    left = re.search(r"%.?", out)
     if left:
         raise ValueError(
             f"unsupported date format specifier {left.group(0)!r} "
@@ -173,75 +169,56 @@ def _truthy(col: Column) -> Column:
     return F.coalesce(col.cast("boolean"), F.lit(False))
 
 
-#: dict-operand expression operators → their FULL server argument sets
-#: (r12, the silently-ignored-argument audit extended to the expression
-#: language: a misspelled or unsupported argument refuses instead of
-#: being dropped).  Checked only when the operand IS a dict — several of
-#: these also take scalar/list shorthand forms.  Keys listed here but
-#: handled specially (ISO week-date in $dateFromParts, method in
-#: $median/$percentile) keep their own informative refusals/deviations.
-_EXPR_DICT_KEYS: dict[str, frozenset] = {
-    "$let": frozenset({"vars", "in"}),
-    "$cond": frozenset({"if", "then", "else"}),
-    "$trim": frozenset({"input", "chars"}),
-    "$ltrim": frozenset({"input", "chars"}),
-    "$rtrim": frozenset({"input", "chars"}),
-    "$replaceOne": frozenset({"input", "find", "replacement"}),
-    "$replaceAll": frozenset({"input", "find", "replacement"}),
-    "$getField": frozenset({"field", "input"}),
-    "$setField": frozenset({"field", "input", "value"}),
-    "$unsetField": frozenset({"field", "input"}),
-    "$convert": frozenset({"input", "to", "onError", "onNull"}),
-    "$dateFromString": frozenset({"dateString", "format", "timezone",
-                                  "onError", "onNull"}),
-    "$map": frozenset({"input", "as", "in"}),
-    "$filter": frozenset({"input", "cond", "as", "limit"}),
-    "$reduce": frozenset({"input", "initialValue", "in"}),
-    "$switch": frozenset({"branches", "default"}),
-    "$sortArray": frozenset({"input", "sortBy"}),
-    "$zip": frozenset({"inputs", "useLongestLength", "defaults"}),
-    "$dateAdd": frozenset({"startDate", "unit", "amount", "timezone"}),
-    "$dateSubtract": frozenset({"startDate", "unit", "amount",
-                                "timezone"}),
-    "$dateTrunc": frozenset({"date", "unit", "binSize", "timezone",
-                             "startOfWeek"}),
-    "$dateDiff": frozenset({"startDate", "endDate", "unit", "timezone",
-                            "startOfWeek"}),
-    "$dateToString": frozenset({"date", "format", "timezone", "onNull"}),
-    "$dateToParts": frozenset({"date", "timezone", "iso8601"}),
-    "$dateFromParts": frozenset({"year", "month", "day", "hour", "minute",
-                                 "second", "millisecond", "isoWeekYear",
-                                 "isoWeek", "isoDayOfWeek", "timezone"}),
-    "$median": frozenset({"input", "method"}),
-    "$percentile": frozenset({"input", "p", "method"}),
-    "$regexMatch": frozenset({"input", "regex", "options"}),
-    "$regexFind": frozenset({"input", "regex", "options"}),
-    "$regexFindAll": frozenset({"input", "regex", "options"}),
-    "$firstN": frozenset({"input", "n"}),
-    "$lastN": frozenset({"input", "n"}),
-    "$minN": frozenset({"input", "n"}),
-    "$maxN": frozenset({"input", "n"}),
-    "$top": frozenset({"sortBy", "output"}),
-    "$bottom": frozenset({"sortBy", "output"}),
-    "$topN": frozenset({"sortBy", "output", "n"}),
-    "$bottomN": frozenset({"sortBy", "output", "n"}),
-}
-
-#: date operators whose server ``timezone`` argument the engine cannot
-#: honor (expressions run in the Spark session TZ — the documented
-#: caveat): the server DEFAULT "UTC" is accepted as a no-op relative to
-#: that caveat; any other zone refuses instead of being silently ignored
-_TZ_UTC_ONLY = frozenset({"$dateTrunc", "$dateAdd", "$dateSubtract",
-                          "$dateDiff", "$dateToString", "$dateFromString",
-                          "$dateToParts"})
+# ---------------------------------------------------------------------------
+# Expression operator table
+# ---------------------------------------------------------------------------
 
 
-def _check_expr_keys(op: str, operand) -> None:
-    allowed = _EXPR_DICT_KEYS.get(op)
-    if allowed is None or not isinstance(operand, dict):
+@dataclass(frozen=True)
+class ExprSpec:
+    """One aggregation expression operator.
+
+    ``compile(op, operand, E, env)`` returns the operator's Column; ``E``
+    compiles a sub-expression under the current variable bindings
+    ``env``.  ``keys`` is the FULL server argument set of a dict operand
+    (r12 audit: a misspelled or unsupported argument refuses instead of
+    being dropped; checked only when the operand IS a dict, since several
+    operators also take scalar/list shorthands).  ``utc_only`` marks a
+    date operator whose ``timezone`` argument the engine cannot honor
+    (expressions run in the Spark session TZ): only the server default
+    "UTC" is accepted.  ``compile=None`` registers an operator that has
+    accumulator/window forms only — its arguments are still validated
+    here, then the expression form refuses.
+    """
+    compile: Callable[..., Column] | None
+    keys: frozenset = frozenset()
+    utc_only: bool = False
+
+
+def _spec(compile_, keys: str = "", utc_only: bool = False) -> ExprSpec:
+    return ExprSpec(compile_, frozenset(keys.split()), utc_only)
+
+
+def _unsupported(op: str) -> ValueError:
+    return ValueError(f"unsupported aggregation expression operator {op}")
+
+
+_UTC_ALIASES = ("UTC", "Etc/UTC", "GMT", "Z", "+00:00", "+0000",
+                "Etc/GMT", "Etc/GMT0", "Etc/GMT+0", "Etc/GMT-0",
+                "GMT0", "GMT+00:00", "Etc/UCT", "UCT",
+                "Etc/Universal", "Universal", "Etc/Zulu", "Zulu",
+                "Etc/Greenwich", "Greenwich")
+
+
+def _check_operand(op: str, operand, spec: ExprSpec | None = None) -> None:
+    """Validate a dict operand against ``op``'s table entry: unknown keys
+    and non-UTC ``timezone`` arguments refuse.  Shared by the expression,
+    accumulator and window dispatchers."""
+    spec = spec or _EXPR_OPS.get(op)
+    if spec is None or not spec.keys or not isinstance(operand, dict):
         return
-    _check_spec_keys(op, operand, allowed)
-    if op in _TZ_UTC_ONLY and "timezone" in operand:
+    _check_spec_keys(op, operand, spec.keys)
+    if spec.utc_only and "timezone" in operand:
         tz = operand["timezone"]
         if tz != "UTC":
             raise ValueError(
@@ -256,11 +233,6 @@ def _check_expr_keys(op: str, operand) -> None:
         from pyspark.sql import SparkSession
         sess = SparkSession.getActiveSession()
         stz = sess.conf.get("spark.sql.session.timeZone") if sess else None
-        _UTC_ALIASES = ("UTC", "Etc/UTC", "GMT", "Z", "+00:00", "+0000",
-                        "Etc/GMT", "Etc/GMT0", "Etc/GMT+0", "Etc/GMT-0",
-                        "GMT0", "GMT+00:00", "Etc/UCT", "UCT",
-                        "Etc/Universal", "Universal", "Etc/Zulu", "Zulu",
-                        "Etc/Greenwich", "Greenwich")
         if stz is not None and stz not in _UTC_ALIASES:
             raise ValueError(
                 f"{op}: timezone 'UTC' requested but the Spark session "
@@ -269,1088 +241,1034 @@ def _check_expr_keys(op: str, operand) -> None:
                 "in the session timezone)")
 
 
-def _expr_op(op: str, operand, env: dict[str, Column] | None = None) -> Column:
-    def E(x):
-        return expr_to_col(x, env)
+def _int_lit(op: str, what: str, v, least: int | None = None) -> int:
+    """The integer-literal check for every operator argument Spark needs
+    as a plan-time constant.  ``bool`` and non-integral floats refuse
+    (no silent ``int()`` truncation: ``n: 2.7`` is not 2, ``n: true`` is
+    not 1); integral floats read as ints; ``least`` (0 or 1) bounds the
+    value from below."""
+    if (isinstance(v, bool) or not isinstance(v, (int, float))
+            or (isinstance(v, float) and not v.is_integer())):
+        raise ValueError(f"{op} {what} must be an integer literal "
+                         f"(expression operands are unsupported; got {v!r})")
+    if least is not None and v < least:
+        bound = "nonnegative" if least == 0 else "positive"
+        raise ValueError(f"{op} {what} must be a {bound} integer literal "
+                         f"(got {v!r})")
+    return int(v)
 
-    def _binary(pair):
-        a, b = pair
-        return E(a), E(b)
 
-    _check_expr_keys(op, operand)
-    if op == "$literal":
-        return F.lit(operand)
-    if op == "$let":
-        bound = dict(env or {})
-        for name, vexpr in operand["vars"].items():
-            bound[name] = expr_to_col(vexpr, env)
-        return expr_to_col(operand["in"], bound)
-    # arithmetic ---------------------------------------------------------
-    if op == "$add":
-        cols = [E(x) for x in operand]
-        out = cols[0]
-        for c in cols[1:]:
-            out = out + c
-        return out
-    if op == "$subtract":
-        a, b = _binary(operand)
-        return a - b
-    if op == "$multiply":
-        cols = [E(x) for x in operand]
-        out = cols[0]
-        for c in cols[1:]:
-            out = out * c
-        return out
-    if op == "$divide":
-        a, b = _binary(operand)
-        return a / b
-    if op == "$mod":
-        a, b = _binary(operand)
-        return a % b
-    if op == "$abs":
-        return F.abs(E(operand))
-    if op == "$ceil":
-        return F.ceil(E(operand))
-    if op == "$floor":
-        return F.floor(E(operand))
-    if op == "$round":
-        # bround, not round: the server rounds HALF TO EVEN ("uses the
-        # 'round half to even' approach to perform rounding") — Spark's
-        # F.round is half-up, which disagrees on every exact .5
-        # ($round(2.5) is 2 on the server, 3 under half-up)
-        e, places = (operand if isinstance(operand, list) else (operand, 0))
-        if not isinstance(places, int) or isinstance(places, bool):
-            # refuse loudly (r11) — previously an expression place was
-            # SILENTLY read as 0; Spark's bround takes a literal scale
-            raise ValueError(
-                "$round place must be an integer literal (expression "
-                f"places are unsupported; got {places!r})")
-        return F.bround(E(e), places)
-    if op == "$sqrt":
-        return F.sqrt(E(operand))
-    if op == "$pow":
-        a, b = _binary(operand)
-        return F.pow(a, b)
-    if op == "$exp":
-        return F.exp(E(operand))
-    if op == "$ln":
-        return F.log(E(operand))
-    # comparison ---------------------------------------------------------
-    if op in ("$eq", "$ne", "$gt", "$gte", "$lt", "$lte"):
-        a, b = _binary(operand)
-        return {"$eq": a == b, "$ne": a != b, "$gt": a > b,
-                "$gte": a >= b, "$lt": a < b, "$lte": a <= b}[op]
-    if op == "$cmp":
-        # null sorts LOWEST in the BSON ordering (SURVEY §1.2), so
-        # $cmp(null, x) is -1, not 0 — a null-propagating `<` would
-        # fall through every when() and return 0 (r10 fix)
-        a, b = _binary(operand)
-        return (F.when(a.isNull() & b.isNull(), 0)
-                .when(a.isNull(), -1).when(b.isNull(), 1)
-                .when(a < b, -1).when(a > b, 1).otherwise(0))
-    # boolean (operands coerced with Mongo truthiness: null/0 → false) ---
-    if op == "$and":
-        cols = [_truthy(E(x)) for x in operand]
-        out = cols[0]
-        for c in cols[1:]:
-            out = out & c
-        return out
-    if op == "$or":
-        cols = [_truthy(E(x)) for x in operand]
-        out = cols[0]
-        for c in cols[1:]:
-            out = out | c
-        return out
-    if op == "$not":
-        inner = operand[0] if isinstance(operand, list) else operand
-        return ~_truthy(E(inner))
-    # conditional --------------------------------------------------------
-    if op == "$cond":
-        if isinstance(operand, dict):
-            cond, then, els = operand["if"], operand["then"], operand["else"]
-        else:
-            cond, then, els = operand
-        return F.when(_truthy(E(cond)), E(then)).otherwise(E(els))
-    if op == "$ifNull":
-        return F.coalesce(*[E(x) for x in operand])
-    # string -------------------------------------------------------------
-    if op == "$concat":
-        return F.concat(*[E(x) for x in operand])
-    if op == "$toUpper":
-        return F.upper(E(operand))
-    if op == "$toLower":
-        return F.lower(E(operand))
-    if op == "$strLenCP":
-        return F.length(E(operand))
-    if op == "$substrCP":
-        s, start, ln = operand
-        # Mongo is 0-based, Spark substring is 1-based.  Literal
-        # start/length validate the server's nonnegative rule at compile
-        # time; expression forms compile through (r10 — previously a
-        # non-literal start was SILENTLY read as 0).
-        for nm, v in (("starting index", start), ("length", ln)):
-            if isinstance(v, bool) or (isinstance(v, int) and v < 0):
-                raise ValueError(f"$substrCP: the {nm} must be a "
-                                 f"nonnegative integer (got {v!r})")
-        # Expression forms are clamped to >= 0 at runtime (r11, per
-        # ADVICE): the server ERRORS on a negative start/length, but a
-        # raw negative here would silently flip Spark's substring into
-        # count-from-the-end semantics — clamping keeps the result inside
-        # server-reachable space (documented deviation: clamp, not raise).
-        start_c = F.lit(start + 1) if isinstance(start, int) \
-            else (F.greatest(E(start).cast("int"), F.lit(0)) + 1)
-        ln_c = F.lit(ln) if isinstance(ln, int) \
-            else F.greatest(E(ln).cast("int"), F.lit(0))
-        return F.substring(E(s), start_c, ln_c)
-    if op == "$split":
-        s, delim = operand
-        # literal delimiter, not a regex (server semantics); the server
-        # rejects an empty separator outright
-        if not isinstance(delim, str) or delim == "":
-            raise ValueError(
-                "$split requires a non-empty string literal delimiter "
-                f"(got {delim!r})")
-        import re as _re
-        return F.split(E(s), _re.escape(delim))
-    if op in ("$trim", "$ltrim", "$rtrim"):
-        inp = E(operand["input"] if isinstance(operand, dict) else operand)
-        chars = operand.get("chars") if isinstance(operand, dict) else None
-        fn = {"$trim": F.trim, "$ltrim": F.ltrim, "$rtrim": F.rtrim}[op]
-        if chars is None:
-            return fn(inp)
-        if not isinstance(chars, str):
-            raise ValueError(f"{op} chars must be a string literal")
-        import re as _re
-        cls = "[" + "".join(_re.escape(c) for c in chars) + "]+"
-        pat = {"$trim": f"^{cls}|{cls}$", "$ltrim": f"^{cls}",
-               "$rtrim": f"{cls}$"}[op]
-        return F.regexp_replace(inp, pat, "")
-    if op == "$indexOfCP":
-        s, sub = operand[0], operand[1]
-        if not isinstance(sub, str) or sub.startswith("$"):
-            raise ValueError("$indexOfCP substring must be a string literal")
-        if len(operand) == 2:
-            # instr is 1-based, 0 on miss; Mongo is 0-based, -1 on miss
-            return F.instr(E(s), sub) - 1
-        # range form: search within [start, end) codepoints, result
-        # index relative to the WHOLE string; start past the string end
-        # → -1, but NEGATIVE start/end is an ERROR on the server — raise
-        # at compile time for provably negative literals (runtime-column
-        # operands can't be checked until execution and fall through to
-        # the -1 guard below, a documented softening)
-        for pos_arg in operand[2:4]:
-            if (isinstance(pos_arg, (int, float))
-                    and not isinstance(pos_arg, bool) and pos_arg < 0):
-                raise ValueError(
-                    "$indexOfCP: start/end must be non-negative "
-                    f"(got {pos_arg!r}) — server error code 40097")
-        start = E(operand[2]).cast("int")
-        text = E(s)
-        end = (E(operand[4 - 1]).cast("int") if len(operand) > 3
-               else F.length(text))
-        region = F.substring(text, start + 1,
-                             F.greatest(end - start, F.lit(0)))
-        pos = F.instr(region, sub)
-        return (F.when((start < 0) | (start > F.length(text)), F.lit(-1))
-                .when(pos == 0, F.lit(-1))
-                .otherwise(pos - 1 + start))
-    if op == "$replaceAll":
-        return F.replace(E(operand["input"]), E(operand["find"]),
-                         E(operand["replacement"]))
-    if op == "$replaceOne":
-        inp, find = E(operand["input"]), E(operand["find"])
-        repl = E(operand["replacement"])
-        pos = F.instr(inp, find)
-        return F.when(pos == 0, inp).otherwise(F.concat(
-            F.substr(inp, F.lit(1), pos - 1), repl,
-            F.substr(inp, pos + F.length(find), F.length(inp))))
-    if op == "$strcasecmp":
-        # server semantics: internally UPPERcases (sign differs from
-        # lowercasing for chars in ASCII 91-96, e.g. '_')
-        a, b = F.upper(E(operand[0])), F.upper(E(operand[1]))
-        return (F.when(a < b, -1).when(a > b, 1).otherwise(0))
-    if op == "$toString":
-        return E(operand).cast("string")
-    # object field access -------------------------------------------------
-    if op == "$getField":
-        # literal field name (server contract); [] works for struct
-        # fields and MAP keys alike
-        if isinstance(operand, str):
-            raise ValueError(
-                "$getField shorthand on the root document is not supported"
-                " — use {field, input}")
-        return E(operand["input"])[operand["field"]]
-    if op == "$setField":
-        if operand.get("value") == "$$REMOVE":
-            # server: $setField with $$REMOVE REMOVES the field — for
-            # struct inputs dropFields expresses that exactly (r12;
-            # the generic $$REMOVE→null mapping would have written a
-            # null-valued field instead)
-            return E(operand["input"]).dropFields(operand["field"])
-        return E(operand["input"]).withField(
-            operand["field"], E(operand["value"]))
-    if op == "$unsetField":
-        # Mongo 5.0 companion of $setField; struct inputs only (like
-        # $setField above — dropFields is the exact server semantics:
-        # removing a missing field is a no-op)
-        return E(operand["input"]).dropFields(operand["field"])
-    if op == "$mergeObjects":
-        # MAP-typed dynamic documents; later operands overwrite earlier
-        # keys (server semantics).  map_concat can't express later-wins
-        # portably (dup-key policy is a session conf), so earlier entries
-        # whose key reappears later are filtered before the merge.
-        # Null operands are IGNORED like the server (all-null → {}) —
-        # r11: previously one null operand poisoned the whole merge.
-        ops = operand if isinstance(operand, list) else [operand]
-        merged = None
-        for x in ops:
-            ent = F.coalesce(F.map_entries(E(x)), F.array())
-            if merged is None:
-                merged = ent
-                continue
-            nxt = ent
-            kept = F.filter(
-                merged,
-                lambda e: ~F.exists(nxt, lambda n: n["key"] == e["key"]))
-            merged = F.concat(kept, nxt)
-        return F.map_from_entries(merged)
-    # date ---------------------------------------------------------------
-    if op in ("$year", "$month", "$dayOfMonth", "$hour", "$minute",
-              "$second", "$dayOfWeek"):
-        fn = {"$year": F.year, "$month": F.month, "$dayOfMonth": F.dayofmonth,
-              "$hour": F.hour, "$minute": F.minute, "$second": F.second,
-              "$dayOfWeek": F.dayofweek}[op]
-        return fn(E(operand))
-    if op == "$isoWeek":
-        return F.weekofyear(E(operand))     # Spark weekofyear IS ISO 8601
-    if op == "$isoWeekYear":
-        # the ISO week-numbering year (Jan 1 can belong to the previous
-        # ISO year); Spark's extract(YEAROFWEEK) is the ISO definition
-        return F.extract(F.lit("YEAROFWEEK"), E(operand)).cast("long")
-    if op == "$isoDayOfWeek":
-        # dayofweek: 1=Sunday..7=Saturday → ISO 1=Monday..7=Sunday
-        return F.pmod(F.dayofweek(E(operand)) + F.lit(5), F.lit(7)) + F.lit(1)
-    if op == "$millisecond":
-        return F.pmod(F.floor(F.unix_micros(E(operand)) / 1000),
-                      F.lit(1000)).cast("int")
-    # array --------------------------------------------------------------
-    if op == "$size":
-        return F.size(E(operand))
-    if op == "$arrayElemAt":
-        arr, idx = operand
-        # element_at is 1-based; negative indexes count from the end in both.
-        # try_element_at: Mongo returns *missing* for an out-of-range index
-        # (plain element_at raises under ANSI mode, which Spark 4 defaults on)
-        if isinstance(idx, int) and not isinstance(idx, bool):
-            return F.try_element_at(E(arr),
-                                    F.lit(idx + 1 if idx >= 0 else idx))
-        # expression index (r11 — previously SILENTLY read as 0, the
-        # dangerous ignored-argument kind): same 0-based→1-based shift,
-        # negatives count from the end
-        i = E(idx).cast("int")
-        return F.try_element_at(E(arr),
-                                F.when(i >= 0, i + 1).otherwise(i))
-    if op == "$concatArrays":
-        return F.concat(*[E(x) for x in operand])
-    if op == "$in":
-        # aggregation equality: null matches null (r11 — array_contains
-        # returns null for a null needle, poisoning the result; the
-        # server finds null elements).  Same eqNullSafe rule as
-        # $indexOfArray.
-        elem, arr = operand
-        e = E(elem)
-        return F.exists(E(arr), lambda x: x.eqNullSafe(e))
-    # object/map reshaping ------------------------------------------------
-    if op == "$objectToArray":
-        # Dynamic documents are modeled as MAP columns (the only Spark
-        # type whose keys are data, matching Mongo's schemaless objects);
-        # emits the server's [{k, v}, ...] shape in key order.
-        return F.transform(
-            F.map_entries(E(operand)),
-            lambda e: F.struct(e["key"].alias("k"), e["value"].alias("v")))
-    if op == "$arrayToObject":
-        # Accepts the {k, v}-struct element form (exactly what
-        # $objectToArray emits, so round-trips compose).  Mongo's
-        # [[k, v], ...] pair form needs runtime element-type dispatch a
-        # compile-time Column can't do — fail loud instead of guessing.
-        arr = operand
-        if isinstance(arr, list):
-            if not (len(arr) == 1 and isinstance(arr[0], list)):
-                raise ValueError(
-                    "$arrayToObject literal form must be [[{k,v}, ...]]; "
-                    "the [[key, value], ...] pair form is not supported")
-            if any(isinstance(e, list) for e in arr[0]):
-                raise ValueError(
-                    "$arrayToObject [[key, value], ...] pair elements are "
-                    "not supported — use {k: ..., v: ...} documents")
-            entries = F.array(*[E(e) for e in arr[0]])
-        else:
-            entries = E(arr)
-        ent = F.transform(entries, lambda x: F.struct(x["k"], x["v"]))
-        # duplicate keys: the server keeps the LAST value; Spark's
-        # map_from_entries THROWS under the default mapKeyDedupPolicy
-        # (a session conf this compiler must not depend on).  Keep each
-        # entry only if no LATER entry shares its key — last-wins, with
-        # each surviving key at its LAST-occurrence position (e.g.
-        # [a,b,a] -> [b,a]); O(entries²) per row on small per-document
-        # arrays.
-        dedup = F.filter(ent, lambda x, i: ~F.exists(
-            F.slice(ent, i + F.lit(2),
-                    F.greatest(F.size(ent) - i - 1, F.lit(0))),
-            lambda y: y["k"] == x["k"]))
-        return F.map_from_entries(dedup)
-    # conversion ---------------------------------------------------------
-    if op == "$toInt":
-        return E(operand).cast("int")
-    if op == "$toLong":
-        return E(operand).cast("long")
-    if op == "$toDouble":
-        return E(operand).cast("double")
-    if op == "$toDecimal":
-        return E(operand).cast("decimal(38,6)")
-    if op == "$toBool":
-        return E(operand).cast("boolean")
-    if op == "$toDate":
-        return E(operand).cast("timestamp")
-    if op == "$toObjectId":
-        # 24-hex validation, NULL through (functions.to_object_id / U1)
-        from mongo_hadoop_spark.functions import to_object_id
-        return to_object_id(E(operand))
-    if op == "$toUUID":
-        # Mongo 8.0: string → UUID (canonical 8-4-4-4-12 lowercase);
-        # malformed input nulls out, like $toObjectId's convention
-        low = F.lower(E(operand))
-        return F.when(low.rlike(
-            "^[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}"
-            "-[0-9a-f]{4}-[0-9a-f]{12}$"), low)
-    if op in ("$function", "$accumulator"):
-        # server-side JavaScript — same standing refusal as $where:
-        # arbitrary JS has no declarative Spark translation, and shipping
-        # an interpreter would put a per-row black box in the hot path
-        raise ValueError(
-            f"{op} runs server-side JavaScript — not supported; express "
-            "the logic as aggregation operators (or mapInPandas outside "
-            "the pipeline language)")
-    if op == "$rand":
-        # deliberate determinism deviation (the $sample/$sampleRate
-        # precedent, r8): the server draws an independent uniform per
-        # evaluation; here it's a uniform md5 hash of the whole row —
-        # reproducible on any engine/partitioning.  The FIRST $rand in a
-        # pipeline is bit-identical to the $sampleRate gate's fraction,
-        # so {$lt: [{$rand: {}}, r]} composes into exactly that gate's
-        # keep-set; subsequent $rand sites in the same pipeline are
-        # salted by their occurrence index (r10, per ADVICE) so
-        # double-threshold random splits do not silently correlate.
-        # Residual deviation: duplicate rows still draw equal values.
-        if operand not in ({}, None):
-            raise ValueError("$rand takes {} (no operands)")
-        seq = _RAND_SEQ.get()
-        idx = next(seq) if seq is not None else 0
-        payload = ("to_json(struct(*))" if idx == 0
-                   else f"concat(to_json(struct(*)), '#rand{idx}')")
-        return (F.expr(f"conv(substring(md5({payload}), 1, 15), "
-                       "16, 10)").cast("double") / F.lit(float(2 ** 60)))
-    if op == "$convert":
-        # the general conversion op: try_cast semantics with onError /
-        # onNull; string/numeric `to` aliases (same table as $type)
-        to = operand["to"]
-        codes = {1: "double", 2: "string", 8: "bool", 9: "date",
-                 16: "int", 18: "long", 19: "decimal"}
-        to = codes.get(to, to) if isinstance(to, int) else to
-        spark_t = {"double": "double", "string": "string",
-                   "bool": "boolean", "date": "timestamp", "int": "int",
-                   "long": "long", "decimal": "decimal(38,6)"}.get(to)
-        if spark_t is None:
-            raise ValueError(f"unsupported $convert target type {to!r}")
-        inp = E(operand["input"])
-        converted = inp.try_cast(spark_t)
-        if "onError" in operand:
-            converted = F.coalesce(converted, E(operand["onError"]))
-        if "onNull" in operand:
-            return F.when(inp.isNull(), E(operand["onNull"])) \
-                .otherwise(converted)
-        return F.when(inp.isNull(), F.lit(None)).otherwise(converted)
-    if op == "$dateFromString":
-        fmt = _date_fmt(operand.get("format", "%Y-%m-%dT%H:%M:%S"))
-        ds = E(operand["dateString"])
-        parsed = F.try_to_timestamp(ds, F.lit(fmt))
-        if "onError" in operand:
-            # onError covers PARSE failures only — null input yields
-            # null (or onNull), exactly like $convert above
-            parsed = F.coalesce(parsed, E(operand["onError"]))
-        on_null = E(operand["onNull"]) if "onNull" in operand \
-            else F.lit(None)
-        return F.when(ds.isNull(), on_null).otherwise(parsed)
-    # array higher-order ops (compiled to Spark lambda HOFs; the bound
-    # variable enters the env as $$this / $$value / the named "as")
-    if op == "$map":
-        var = operand.get("as", "this")
-        return F.transform(
-            E(operand["input"]),
-            lambda x: expr_to_col(operand["in"], {**(env or {}), var: x, "this": x}))
-    if op == "$filter":
-        var = operand.get("as", "this")
-        filtered = F.filter(
-            E(operand["input"]),
-            lambda x: expr_to_col(operand["cond"], {**(env or {}), var: x, "this": x}))
-        limit = operand.get("limit")
-        if limit is None:
-            return filtered
-        # Mongo 5.2 limit: first n matches (previously IGNORED silently)
-        if not isinstance(limit, int) or isinstance(limit, bool) \
-                or limit < 1:
-            raise ValueError("$filter limit must be a positive integer "
-                             f"literal (got {limit!r})")
-        return F.slice(filtered, 1, limit)
-    if op == "$reduce":
-        arr = E(operand["input"])
-        init = E(operand["initialValue"])
-        # Server typing is dynamic (the accumulator promotes per
-        # element), but Spark's aggregate() requires the zero to ALREADY
-        # carry the merge expression's result type — {$reduce: {input:
-        # "$longs", initialValue: 0, in: {$add: [...]}}} used to fail
-        # analysis with INT zero vs BIGINT merge.  Resolve the merge
-        # type symbolically: apply the in-expression once to (init,
-        # first element) inside a never-taken branch; when(false,
-        # probe).otherwise(init) analyzes to the least-common type with
-        # init's value, and SimplifyConditionals folds the dead branch
-        # out of the physical plan.  F.get (not element_at) keeps the
-        # probe null-safe even if it were ever evaluated under ANSI.
-        # the probe is a THROWAWAY compile of the in-expression: shield
-        # the $rand occurrence sequence so it does not consume an index
-        # and shift every later $rand site's salt (review fix, r12)
-        probe_tok = _RAND_SEQ.set(None)
-        try:
-            probe = expr_to_col(
-                operand["in"],
-                {**(env or {}), "value": init,
-                 "this": F.get(arr, F.lit(0))})
-        finally:
-            _RAND_SEQ.reset(probe_tok)
-        zero = F.when(F.lit(False), probe).otherwise(init)
-        return F.aggregate(
-            arr, zero,
-            lambda acc, x: expr_to_col(
-                operand["in"], {**(env or {}), "value": acc, "this": x}))
-    if op == "$switch":
-        # server: "$switch requires at least one branch" (r12 — an empty
-        # branches list previously crashed with AttributeError on None)
-        if not operand.get("branches"):
-            raise ValueError("$switch requires at least one branch")
-        out = None
-        for br in operand["branches"]:
-            _check_spec_keys("$switch branch", br, {"case", "then"})
-            c, t = _truthy(E(br["case"])), E(br["then"])
-            out = F.when(c, t) if out is None else out.when(c, t)
-        if "default" in operand:
-            return out.otherwise(E(operand["default"]))
-        # no default + no matching branch is a SERVER ERROR (r11 —
-        # previously fell through to null, the dangerous silent kind);
-        # raise_error reproduces the fail-the-query behavior per row
-        return out.otherwise(F.raise_error(F.lit(
-            "$switch could not find a matching branch for an input, "
-            "and no default was specified")))
-    if op == "$range":
-        start_, end_ = E(operand[0]), E(operand[1])
-        step = operand[2] if len(operand) > 2 else 1
-        if not isinstance(step, int) or step == 0:
-            raise ValueError("$range step must be a nonzero integer literal")
-        # Mongo excludes the end bound; sequence() includes it
-        return F.when(
-            (end_ - start_) * F.lit(step) <= 0, F.array().cast("array<int>")
-        ).otherwise(
-            F.sequence(start_.cast("int"),
-                       (end_ - F.lit(1 if step > 0 else -1)).cast("int"),
-                       F.lit(step)))
-    if op == "$reverseArray":
-        return F.reverse(E(operand))
-    if op == "$sortArray":
-        by = operand.get("sortBy", 1)
-        if isinstance(by, dict):
-            # document sort keys over struct elements (r12): the same
-            # multi-key -1/0/1 comparator the $lookup sub-pipeline
-            # $sort uses — BSON null ordering (nulls first ascending,
-            # last descending) per key, later keys tie-break
-            if not by or not all(
-                    not isinstance(d, bool) and d in (1, -1)
-                    for d in by.values()):
-                raise ValueError(
-                    "$sortArray document sortBy values must be 1 or -1")
-            return F.array_sort(E(operand["input"]),
-                                _array_sort_comparator(by))
-        if not isinstance(by, int):
-            raise ValueError(
-                "$sortArray sortBy must be 1/-1 or a {field: 1|-1} "
-                "document")
-        return F.sort_array(E(operand["input"]), asc=by >= 0)
-    if op == "$zip":
-        inputs = [E(x) for x in operand["inputs"]]
-        # server rule (both forms): if ANY input resolves to null or a
-        # missing field, the whole $zip is null — not empty/padded
-        nn = _fold_and([c.isNotNull() for c in inputs])
-        if operand.get("useLongestLength"):
-            # pad to the longest input; per-input default (or null)
-            # fills the missing tail — Spark arrays are homogeneous, so
-            # inputs (and defaults) must share element type
-            defaults = operand.get("defaults")
-            if defaults is not None and len(defaults) != len(inputs):
-                raise ValueError("$zip defaults must match inputs length")
-            longest = (F.size(inputs[0]) if len(inputs) == 1
-                       else F.greatest(*[F.size(c) for c in inputs]))
-            dflt = [E(defaults[j]) if defaults is not None else F.lit(None)
-                    for j in range(len(inputs))]
-            return F.when(nn, F.transform(
-                F.filter(F.sequence(F.lit(1),
-                                    F.greatest(longest, F.lit(1))),
-                         lambda i: i <= longest),
-                lambda i: F.array(*[
-                    F.when(i <= F.size(c), F.element_at(c, i))
-                    .otherwise(d) for c, d in zip(inputs, dflt)])))
-        # Mongo yields array-of-arrays truncated to the shortest input;
-        # Spark arrays are homogeneous, so inputs must share element type
-        shortest = (F.size(inputs[0]) if len(inputs) == 1
-                    else F.least(*[F.size(c) for c in inputs]))
-        # shortest == 0 must yield [] — sequence(1, 0) would count DOWN
-        # ([1, 0]) and element_at(col, 0) raises at runtime.  Clamp the
-        # sequence end to ≥1 and filter out-of-range indexes so the
-        # transform lambda never sees an invalid index.
-        return F.when(nn, F.transform(
-            F.filter(F.sequence(F.lit(1), F.greatest(shortest, F.lit(1))),
-                     lambda i: i <= shortest),
-            lambda i: F.array(*[F.element_at(c, i) for c in inputs])))
-    if op == "$firstN":
-        return F.slice(E(operand["input"]), 1, int(operand["n"]))
-    if op == "$lastN":
-        return F.reverse(
-            F.slice(F.reverse(E(operand["input"])), 1, int(operand["n"])))
-    if op == "$trunc":
-        e, places = (operand if isinstance(operand, list) else (operand, 0))
-        if not isinstance(places, int) or isinstance(places, bool):
-            raise ValueError(
-                "$trunc places must be an integer literal (field-path "
-                f"operands are not supported): {places!r}")
-        p = places
-        scale = F.lit(float(10 ** p))
-        x = E(e)
-        return (F.when(x >= 0, F.floor(x * scale))
-                .otherwise(F.ceil(x * scale)) / scale)
-    if op == "$log10":
-        return F.log10(E(operand))
-    if op == "$log":
-        num, base = operand
-        return F.log(E(num)) / F.log(E(base))
-    if op == "$dateSubtract":
-        unit, amount = operand["unit"], operand["amount"]
-        if not isinstance(amount, int):
-            raise ValueError("$dateSubtract amount must be an integer literal")
-        if unit in ("year", "quarter", "month", "week"):
-            months = {"year": 12, "quarter": 3, "month": 1}.get(unit)
-            iv = (F.make_interval(months=F.lit(amount * months))
-                  if months else
-                  F.make_interval(weeks=F.lit(amount)))
-            return E(operand["startDate"]) - iv
-        if unit == "millisecond":
-            # exact epoch-millis arithmetic (a dt-interval of
-            # amount/1000 s would round through binary fractions)
-            x = E(operand["startDate"]).cast("timestamp")
-            return F.timestamp_millis(F.unix_millis(x) - F.lit(amount))
-        if unit not in ("day", "hour", "minute", "second"):
-            raise ValueError(f"unsupported $dateSubtract unit {unit!r}")
-        kw = {"day": "days", "hour": "hours", "minute": "mins",
-              "second": "secs"}[unit]
-        return E(operand["startDate"]) - F.make_dt_interval(
-            **{kw: F.lit(amount)})
-    if op == "$indexOfArray":
-        arr, search = operand[0], operand[1]
+def _single(x):
+    """The one argument of an operator that also takes ``[arg]``."""
+    return x[0] if isinstance(x, list) else x
 
-        # Null-safe 0-based first-match scan (r11, per ADVICE): the server
-        # compares with aggregation equality, under which null == null, so
-        # a null search value FINDS null elements (and misses → -1) — it
-        # does not poison the result.  array_position cannot express that
-        # (null search → null), so both forms share one eqNullSafe fold;
-        # a null ARRAY still yields null (HOFs propagate null input).
-        def _nullsafe_idx(window, needle):
-            indexed = F.transform(
-                window, lambda x, i: F.struct(x.alias("v"), i.alias("i")))
-            return F.aggregate(
-                indexed, F.lit(-1),
-                lambda acc, s: F.when(
-                    (acc == -1) & s["v"].eqNullSafe(needle),
-                    s["i"].cast("int")).otherwise(acc))
 
-        if len(operand) == 2:
-            return _nullsafe_idx(E(arr), E(search))
-        # 4-arg range form (search within [start, end)); index reported
-        # against the ORIGINAL array — previously the extra args were
-        # IGNORED silently (r10)
-        start = operand[2]
-        end = operand[3] if len(operand) > 3 else None
-        for nm, v in (("start", start), ("end", end)):
-            if v is not None and (not isinstance(v, int)
-                                  or isinstance(v, bool) or v < 0):
-                raise ValueError(f"$indexOfArray {nm} must be a "
-                                 f"nonnegative integer literal (got {v!r})")
-        a = E(arr)
-        window = (F.slice(a, start + 1,
-                          F.greatest(F.size(a) - start, F.lit(0)))
-                  if end is None
-                  else F.slice(a, start + 1, max(end - start, 0)))
-        pos = _nullsafe_idx(window, E(search))
-        return F.when(pos >= 0, (pos + start).cast("int")) \
-            .otherwise(F.when(a.isNotNull(), F.lit(-1)).cast("int"))
-    if op == "$setUnion":
-        cols = [E(x) for x in operand]
-        out = cols[0]
-        for c in cols[1:]:
-            out = F.array_union(out, c)
-        return F.array_sort(F.array_distinct(out))
-    if op == "$setIntersection":
-        cols = [E(x) for x in operand]
-        out = cols[0]
-        for c in cols[1:]:
-            out = F.array_intersect(out, c)
-        return F.array_sort(F.array_distinct(out))
-    if op == "$setDifference":
-        a, b = _binary(operand)
-        return F.array_sort(F.array_distinct(F.array_except(a, b)))
-    if op == "$setIsSubset":
-        a, b = _binary(operand)
-        return F.size(F.array_except(F.array_distinct(a), b)) == 0
-    if op == "$setEquals":
-        a, b = _binary(operand)
-        return (F.size(F.array_except(a, b)) == 0) \
-            & (F.size(F.array_except(b, a)) == 0)
-    if op == "$slice":
-        if len(operand) == 2:
-            arr, n = E(operand[0]), operand[1]
-            if not isinstance(n, int):
-                raise ValueError("$slice count must be an integer literal")
-            return F.slice(arr, 1, n) if n >= 0 else F.slice(arr, n, -n)
-        arr, pos, n = E(operand[0]), operand[1], operand[2]
-        if not isinstance(pos, int) or not isinstance(n, int) or n < 0:
-            raise ValueError("$slice position/count must be integer literals")
-        return F.slice(arr, pos + 1 if pos >= 0 else pos, n)
-    # --- array-form accumulator expressions (Mongo 5.2/7.0: in a
-    # $project/$addFields context, $min/$max/$sum/$avg & friends accept
-    # an ARRAY operand and aggregate its elements per row) -------------
-    if op in ("$maxN", "$minN"):
-        # {$maxN: {n, input}}: the n largest (resp. smallest) elements,
-        # ordered largest-first (resp. smallest-first); nulls ignored
-        # (server: nulls/missing are not candidates)
-        arr = F.filter(E(operand["input"]), lambda x: x.isNotNull())
-        srt = F.sort_array(arr, asc=(op == "$minN"))
-        return F.slice(srt, 1, int(operand["n"]))
-    if op == "$max" and isinstance(operand, list):
-        return F.greatest(*[E(x) for x in operand])
-    if op == "$min" and isinstance(operand, list):
-        return F.least(*[E(x) for x in operand])
-    if op in ("$max", "$min"):
-        # scalar-LITERAL operands pass through like the server (r11 —
-        # {$max: 5} is 5 per row, {$min: "abc"} is "abc"; previously
-        # these hit array_max/array_min and failed Spark analysis).
-        # Scalar-typed FIELD PATHS are dispatched schema-aware in
-        # ``_project_expr``; here a field-path/computed operand is
-        # assumed to be an array.
-        if (operand is None or isinstance(operand, bool)
-                or isinstance(operand, (int, float))
-                or (isinstance(operand, str) and not operand.startswith("$"))):
-            return F.lit(operand)
-        return (F.array_max(E(operand)) if op == "$max"
-                else F.array_min(E(operand)))
-    if op in ("$sum", "$avg") and not isinstance(operand, list):
-        # scalar-literal operands pass through like the server ({$sum: 1}
-        # → 1 per row; non-numeric scalar → 0 for $sum, null for $avg) —
-        # only field-path/computed operands are treated as arrays below
-        if (isinstance(operand, bool)
-                or (isinstance(operand, str) and not operand.startswith("$"))
-                or not isinstance(operand, (int, float, str, dict))):
-            return F.lit(0) if op == "$sum" else F.lit(None)
-        if isinstance(operand, (int, float)):
-            return F.lit(operand)
-        # NOTE: scalar-typed FIELD PATHS ({$sum: "$price"} on a
-        # non-array column — server pass-through) are dispatched
-        # schema-aware in ``_project_expr``; here the type is unknown,
-        # so a field-path operand is assumed to be an array and a
-        # scalar one fails Spark analysis at plan time.
-        # per-row fold over the array, LEFT-TO-RIGHT (determinism:
-        # float addition is order-sensitive; a fold has one order) —
-        # nulls ignored like the server; $sum of an empty array is 0,
-        # $avg is null
-        arr = F.filter(E(operand), lambda x: x.isNotNull())
-        total = F.aggregate(arr, F.lit(0.0),
-                            lambda acc, x: acc + x.cast("double"))
-        if op == "$sum":
-            # a NULL/missing operand sums to 0 like the server ($sum
-            # "returns 0 if all operands are non-numeric") — without
-            # the coalesce a null ARRAY column propagated null (r10
-            # review finding), diverging from the scalar pass-through
-            return F.coalesce(total, F.lit(0.0))
-        n = F.size(arr)
-        return F.when(n > 0, total / n.cast("double"))
-    if op in ("$stdDevPop", "$stdDevSamp"):
-        # sum/sum-of-squares folds (deterministic order both engines);
-        # E[x^2] - E[x]^2 form, clamped at 0 against rounding
-        arr = F.filter(E(operand), lambda x: x.isNotNull())
-        n = F.size(arr).cast("double")
-        s = F.aggregate(arr, F.lit(0.0),
-                        lambda acc, x: acc + x.cast("double"))
-        s2 = F.aggregate(arr, F.lit(0.0),
-                         lambda acc, x: acc + x.cast("double")
-                         * x.cast("double"))
-        denom = n if op == "$stdDevPop" else n - F.lit(1.0)
-        var = (s2 - s * s / n) / denom
-        return F.when(denom > 0,
-                      F.sqrt(F.greatest(var, F.lit(0.0))))
-    if op == "$median":
-        # expression form over an array; engine deviation (documented):
-        # the server's method is an approximate t-digest, this is the
-        # EXACT discrete lower median sorted[ceil(n/2)] — deterministic
-        # and oracle-gateable (quantile_disc semantics)
-        if isinstance(operand, dict):
-            operand = operand["input"]
-        arr = F.sort_array(F.filter(E(operand), lambda x: x.isNotNull()))
-        n = F.size(arr)
-        return F.when(n > 0, F.get(arr, F.ceil(n / 2).cast("int") - 1))
-    if op == "$percentile":
-        # expression form over an array (Mongo 7.0): one value per
-        # requested p, as an array.  Same documented deviation as
-        # $median: exact discrete (sorted[ceil(p*n)], the
-        # percentile_disc convention) vs the server's t-digest.
-        ps = operand["p"]
-        if not (isinstance(ps, list) and
-                all(isinstance(p, (int, float)) for p in ps)):
-            raise ValueError("$percentile p must be a list of numeric "
-                             "literals")
-        arr = F.sort_array(F.filter(E(operand["input"]),
-                                    lambda x: x.isNotNull()))
-        n = F.size(arr)
-        vals = [F.get(arr, F.greatest(
-            F.ceil(n * F.lit(float(p))).cast("int"), F.lit(1)) - 1)
-            for p in ps]
-        return F.when(n > 0, F.array(*vals))
-    if op == "$first" and not isinstance(operand, list):
-        return F.get(E(operand), 0)
-    if op == "$last" and not isinstance(operand, list):
-        arr = E(operand)
-        return F.get(arr, F.size(arr) - 1)
-    # date arithmetic (timezone-naive caveat: Spark applies the session
-    # timezone where the server would use the `timezone` arg; keep
-    # sessions in a fixed TZ or use epoch math for cross-engine work)
-    if op == "$dateTrunc":
-        unit = operand["unit"]
-        if unit not in ("year", "quarter", "month", "week", "day", "hour",
-                        "minute", "second"):
-            raise ValueError(f"unsupported $dateTrunc unit {unit!r}")
-        bin_size = operand.get("binSize", 1)
-        if not isinstance(bin_size, int) or isinstance(bin_size, bool) \
-                or bin_size < 1:
-            raise ValueError("$dateTrunc binSize must be a positive "
-                             f"integer literal (got {bin_size!r})")
-        starts = {"sunday": 0, "monday": 1, "tuesday": 2,
-                  "wednesday": 3, "thursday": 4, "friday": 5,
-                  "saturday": 6}
-        sow = str(operand.get("startOfWeek", "Sunday")).lower()
-        if unit == "week" and sow not in starts:
-            raise ValueError(
-                f"$dateTrunc: unknown startOfWeek "
-                f"{operand.get('startOfWeek')!r}")
-        x = E(operand["date"])
-        # fixed-length units take pure epoch arithmetic for EVERY
-        # binSize (r10, per ADVICE): binSize=1 is just the degenerate
-        # bin, and the old date_trunc fallback truncated to
-        # session-LOCAL boundaries where binSize>1 used UTC ones — the
-        # two modes disagreed under a non-UTC session TZ.  The anchor
-        # 946684800 (2000-01-01T00:00Z) is a multiple of 86400, so
-        # binSize=1 day is exact UTC-midnight truncation (server
-        # default timezone), likewise hour/minute/second.
-        if unit in ("second", "minute", "hour", "day"):
-            secs = {"second": 1, "minute": 60, "hour": 3600,
-                    "day": 86400}[unit] * bin_size
-            e2k = F.unix_timestamp(x) - F.lit(946684800)
-            binned = (F.floor(e2k / F.lit(secs)) * F.lit(secs)
-                      + F.lit(946684800))
-            return F.timestamp_seconds(binned)
-        if bin_size > 1:
-            # calendar units, binSize form (Mongo 5.0): bins anchored at
-            # the server's reference instant 2000-01-01T00:00:00 (for
-            # week: the startOfWeek on or before it) via day/month-index
-            # arithmetic.  The to_date/year/month field extraction is
-            # session-TZ-interpreted — consistent with the binSize=1
-            # calendar path below (both modes agree under any one
-            # session TZ; keep sessions UTC for server parity).
-            if unit == "week":
-                # 2000-01-01 is a Saturday (dayofweek index 6); anchor
-                # on the startOfWeek on-or-before it
-                anchor_off = (6 - starts[sow]) % 7
-                anchor = F.date_sub(F.lit("2000-01-01").cast("date"),
-                                    anchor_off)
-                days = F.datediff(F.to_date(x), anchor)
-                step = 7 * bin_size
-                return F.date_add(
-                    anchor, (F.floor(days / F.lit(step))
-                             * F.lit(step)).cast("int")).cast("timestamp")
-            months_per = {"month": 1, "quarter": 3, "year": 12}[unit]
-            step_m = months_per * bin_size
-            midx = (F.year(x) - F.lit(2000)) * 12 + F.month(x) - F.lit(1)
-            snapped = (F.floor(midx / F.lit(step_m))
-                       * F.lit(step_m)).cast("int")
-            return F.add_months(F.lit("2000-01-01").cast("date"),
-                                snapped).cast("timestamp")
-        if unit == "week":
-            # server semantics: truncate to the startOfWeek (default
-            # Sunday) midnight — Spark's date_trunc('week') is
-            # hard-anchored to Monday, so do it with day arithmetic
-            # (same startOfWeek table as $dateDiff week)
-            d = (F.dayofweek(x) + F.lit(6 - starts[sow])) % 7
-            return F.date_sub(F.to_date(x), d).cast("timestamp")
-        return F.date_trunc(unit, x)
-    if op == "$dateDiff":
-        # the server counts UNIT-BOUNDARY CROSSINGS, not elapsed floors
-        unit = operand["unit"]
-        a, b = E(operand["startDate"]), E(operand["endDate"])
-        if unit == "year":
-            return (F.year(b) - F.year(a)).cast("long")
-        if unit == "quarter":
-            return ((F.year(b) - F.year(a)) * 4
-                    + (F.quarter(b) - F.quarter(a))).cast("long")
-        if unit == "month":
-            return ((F.year(b) - F.year(a)) * 12
-                    + (F.month(b) - F.month(a))).cast("long")
-        if unit == "day":
-            return F.datediff(b, a).cast("long")
-        if unit == "week":
-            # startOfWeek-boundary crossings (server semantics, default
-            # Sunday): align each endpoint back to its week start, then
-            # the day gap is an exact multiple of 7.  Saturday→Sunday is
-            # 1 under the default, not 0 (elapsed-block floor would say 0).
-            starts = {"sunday": 0, "monday": 1, "tuesday": 2,
-                      "wednesday": 3, "thursday": 4, "friday": 5,
-                      "saturday": 6}
-            sow = str(operand.get("startOfWeek", "Sunday")).lower()
-            if sow not in starts:
-                raise ValueError(
-                    f"$dateDiff: unknown startOfWeek {operand.get('startOfWeek')!r}")
-            off = starts[sow]
-            # days since week start: dayofweek is 1=Sun..7=Sat
-            da = (F.dayofweek(a) + F.lit(6 - off)) % 7
-            db = (F.dayofweek(b) + F.lit(6 - off)) % 7
-            return (F.datediff(F.date_sub(b, db), F.date_sub(a, da))
-                    / 7).cast("long")
-        if unit in ("hour", "minute", "second"):
-            div = {"hour": 3600, "minute": 60, "second": 1}[unit]
-            ta = F.unix_timestamp(F.date_trunc(unit, a))
-            tb = F.unix_timestamp(F.date_trunc(unit, b))
-            return ((tb - ta) / div).cast("long")
-        if unit == "millisecond":
-            return (F.unix_millis(b.cast("timestamp"))
-                    - F.unix_millis(a.cast("timestamp"))).cast("long")
-        raise ValueError(f"unsupported $dateDiff unit {unit!r}")
-    if op in ("$dateAdd",):
-        unit, amount = operand["unit"], operand["amount"]
-        if not isinstance(amount, int):
-            raise ValueError("$dateAdd amount must be an integer literal")
-        if unit in ("year", "quarter", "month", "week"):
-            # calendar-aware: timestamp + year-month/week interval
-            # (end-of-month clamping matches the server: Jan 31 + 1
-            # month = Feb 28/29)
-            months = {"year": 12, "quarter": 3, "month": 1}.get(unit)
-            iv = (F.make_interval(months=F.lit(amount * months))
-                  if months else
-                  F.make_interval(weeks=F.lit(amount)))
-            return E(operand["startDate"]) + iv
-        if unit == "millisecond":
-            # exact epoch-millis arithmetic (see $dateSubtract)
-            x = E(operand["startDate"]).cast("timestamp")
-            return F.timestamp_millis(F.unix_millis(x) + F.lit(amount))
-        if unit not in ("day", "hour", "minute", "second"):
-            raise ValueError(f"unsupported $dateAdd unit {unit!r}")
-        kw = {"day": "days", "hour": "hours", "minute": "mins",
-              "second": "secs"}[unit]
-        return E(operand["startDate"]) + F.make_dt_interval(
-            **{kw: F.lit(amount)})
-    if op == "$dateToString":
-        fmt = _date_fmt(operand.get("format", "%Y-%m-%dT%H:%M:%S"))
-        d = E(operand["date"])
-        s = F.date_format(d, fmt)
-        if "onNull" in operand:
-            # r12 audit: previously silently ignored (the no-onNull
-            # behavior — null in, null out — happened to coincide)
-            return F.when(d.isNull(), E(operand["onNull"])).otherwise(s)
-        return s
-    if op == "$dateToParts":
-        d = E(operand["date"] if isinstance(operand, dict) else operand)
-        ms = F.pmod(F.floor(F.unix_micros(d) / 1000), F.lit(1000)) \
-            .cast("int").alias("millisecond")
-        # pmod over floor-div: pre-epoch timestamps must yield 0-999
-        # (Spark's % keeps the dividend sign)
-        if isinstance(operand, dict) and operand.get("iso8601"):
-            # iso8601: true swaps the calendar fields for the ISO
-            # week-date triple (r11 — previously SILENTLY ignored)
-            return F.struct(
-                F.extract(F.lit("YEAROFWEEK"), d).cast("long")
-                .alias("isoWeekYear"),
-                F.weekofyear(d).alias("isoWeek"),
-                (F.pmod(F.dayofweek(d) + F.lit(5), F.lit(7)) + F.lit(1))
-                .alias("isoDayOfWeek"),
-                F.hour(d).alias("hour"), F.minute(d).alias("minute"),
-                F.second(d).alias("second"), ms)
-        return F.struct(
-            F.year(d).alias("year"), F.month(d).alias("month"),
-            F.dayofmonth(d).alias("day"), F.hour(d).alias("hour"),
-            F.minute(d).alias("minute"), F.second(d).alias("second"), ms)
-    if op == "$dateFromParts":
-        # session-TZ caveat as with the other date ops (documented)
-        unsupported = {"isoWeekYear", "isoWeek", "isoDayOfWeek",
-                       "timezone"} & operand.keys()
-        if unsupported:
-            # refuse loudly (r11) — previously these were silently
-            # dropped, assembling a different instant than asked for
-            raise ValueError(
-                f"$dateFromParts fields {sorted(unsupported)} are "
-                "unsupported (ISO week-date form and timezone)")
-        parts = {k: E(operand[k]) if k in operand else F.lit(d)
-                 for k, d in (("year", 2000), ("month", 1), ("day", 1),
-                              ("hour", 0), ("minute", 0), ("second", 0))}
-        ts = F.make_timestamp(parts["year"], parts["month"], parts["day"],
-                              parts["hour"], parts["minute"],
-                              parts["second"])
-        if "millisecond" in operand:
-            # carried via microsecond arithmetic (r11 — previously
-            # silently dropped); server allows out-of-range carry
-            ts = F.timestamp_micros(
-                F.unix_micros(ts)
-                + (E(operand["millisecond"]).cast("long") * 1000))
-        return ts
-    if op == "$dayOfYear":
-        return F.dayofyear(E(operand))
-    if op == "$week":
-        # Mongo $week is the SUNDAY-start week-of-year (strftime %U:
-        # days before the year's first Sunday are week 0) — NOT the ISO
-        # week, which $isoWeek covers (r11; weekofyear here was ISO).
-        d = E(operand)
-        return F.floor((F.dayofyear(d) + F.lit(6)
-                        - (F.dayofweek(d) - F.lit(1))) / F.lit(7)) \
-            .cast("int")
-    if op == "$regexMatch":
-        return E(operand["input"]).rlike(_regex_pattern(operand))
-    if op in ("$regexFind", "$regexFindAll"):
-        return _regex_find(op, operand, E)
-    if op == "$meta":
-        # search-stage metadata: resolved from the hidden columns the
-        # $vectorSearch / $geoNear stages attach (server: index metadata)
-        meta_cols = {"vectorSearchScore": _VS_SCORE_COL,
-                     "geoNearDistance": _GEO_DIST_COL,
-                     "searchScore": _SEARCH_SCORE_COL,
-                     "searchHighlights": _SEARCH_HIGHLIGHTS_COL,
-                     "textScore": _TEXT_SCORE_COL,
-                     "score": _FUSION_SCORE_COL}
-        if operand not in meta_cols:
-            raise ValueError(
-                f"unsupported aggregation expression $meta kind {operand!r}")
-        return F.col(meta_cols[operand])
-    # trigonometry (Mongo 4.2 family) ------------------------------------
-    _TRIG = {"$sin": F.sin, "$cos": F.cos, "$tan": F.tan,
-             "$asin": F.asin, "$acos": F.acos, "$atan": F.atan,
-             "$sinh": F.sinh, "$cosh": F.cosh, "$tanh": F.tanh,
-             "$asinh": F.asinh, "$acosh": F.acosh, "$atanh": F.atanh,
-             "$degreesToRadians": F.radians, "$radiansToDegrees": F.degrees}
-    if op in _TRIG:
-        return _TRIG[op](E(operand))
-    if op == "$atan2":
-        a, b = _binary(operand)
-        return F.atan2(a, b)
-    # bitwise integer family (Mongo 6.3) ---------------------------------
-    if op in ("$bitAnd", "$bitOr", "$bitXor"):
-        if not isinstance(operand, list) or not operand:
+def _unary(fn):
+    return lambda op, x, E, env: fn(E(x))
+
+
+def _binary(fn):
+    def compile_(op, x, E, env):
+        a, b = x
+        return fn(E(a), E(b))
+    return compile_
+
+
+def _nary(fn):
+    return lambda op, x, E, env: fn(*[E(v) for v in x])
+
+
+def _fold(step, each=None, done=None):
+    """Variadic left fold over the operand array (operands compile in
+    order): ``each`` maps every operand, ``done`` finishes the fold."""
+    def compile_(op, x, E, env):
+        if not isinstance(x, list) or not x:
             raise ValueError(f"{op} takes a non-empty operand array")
-        cols = [E(x) for x in operand]
-        out = cols[0]
-        for c in cols[1:]:
-            if op == "$bitAnd":
-                out = out.bitwiseAND(c)
-            elif op == "$bitOr":
-                out = out.bitwiseOR(c)
-            else:
-                out = out.bitwiseXOR(c)
-        return out
-    if op == "$bitNot":
-        return F.bitwise_not(E(operand))
-    # type introspection -------------------------------------------------
-    # Spark column types are static, but $type/$isNumber are about the
-    # *runtime* value, which matters for untyped/variant-ish columns; the
-    # runtime `typeof()` answers both and collapses to a constant after
-    # Catalyst constant-folding when the input type is fixed.
-    if op == "$type":
-        t = F.call_function("typeof", E(operand))
-        return (F.when(E(operand).isNull(), "null")
-                 .when(t == "string", "string")
-                 .when(t.isin("int", "smallint", "tinyint"), "int")
-                 .when(t == "bigint", "long")
-                 .when(t.isin("double", "float"), "double")
-                 .when(t.startswith("decimal"), "decimal")
-                 .when(t == "boolean", "bool")
-                 .when(t.isin("timestamp", "timestamp_ntz", "date"), "date")
-                 .when(t.startswith("array"), "array")
-                 .when(t.startswith("struct") | t.startswith("map"), "object")
-                 .when(t == "binary", "binData")
-                 .otherwise(t))
-    if op == "$isNumber":
-        t = F.call_function("typeof", E(operand))
-        return (E(operand).isNotNull()
-                & (t.isin("int", "smallint", "tinyint", "bigint",
-                          "double", "float") | t.startswith("decimal")))
-    if op == "$isArray":
-        inner = operand[0] if isinstance(operand, list) else operand
-        t = F.call_function("typeof", E(inner))
-        return E(inner).isNotNull() & t.startswith("array")
-    # set/array predicates -----------------------------------------------
-    if op == "$allElementsTrue":
-        arr = operand[0] if isinstance(operand, list) else operand
-        return F.forall(E(arr), _truthy)
-    if op == "$anyElementTrue":
-        arr = operand[0] if isinstance(operand, list) else operand
-        return F.exists(E(arr), _truthy)
-    # byte-level string/binary sizing ------------------------------------
-    if op == "$strLenBytes":
-        return F.octet_length(E(operand))
-    if op == "$binarySize":
-        return F.octet_length(E(operand))
-    if op == "$substrBytes":
-        # byte-indexed substring: slice the UTF-8 encoding, decode back.
-        # Documented deviation: the server ERRORS when an index splits a
-        # multi-byte character; here the decode yields replacement chars
-        # instead (no declarative way to raise per-row).
-        s, start, count = (E(operand[0]), E(operand[1]), E(operand[2]))
-        return F.decode(
-            F.substring(F.encode(s, "UTF-8"), start + F.lit(1), count),
-            "UTF-8")
-    if op == "$indexOfBytes":
-        # byte offset of the first occurrence (−1 if absent), optional
-        # [start, end] byte range.  Byte positions come from the latin1
-        # trick: ISO-8859-1 decodes bytes 1:1 to chars, so instr over
-        # the latin1 view counts BYTES (Spark's position/instr coerce
-        # binary operands back to UTF-8 strings, which would count
-        # characters instead).
-        args = operand if isinstance(operand, list) else [operand]
+        cols = [E(v) if each is None else each(E(v)) for v in x]
+        out = functools.reduce(step, cols)
+        return out if done is None else done(out)
+    return compile_
 
-        def _bytes_view(c):
-            return F.decode(F.encode(c, "UTF-8"), "ISO-8859-1")
 
-        sb, subb = _bytes_view(E(args[0])), _bytes_view(E(args[1]))
-        if len(args) > 2:
-            start = E(args[2])
-            end = E(args[3]) if len(args) > 3 else F.length(sb)
-            window = F.substring(sb, start + F.lit(1),
-                                 F.greatest(end - start, F.lit(0)))
-            pos = F.instr(window, subb)
-            return F.when(pos > 0, pos - 1 + start).otherwise(F.lit(-1))
-        return F.instr(sb, subb) - F.lit(1)
-    if op == "$tsSecond":
-        # BSON timestamp ({t, i} struct per extjson) → seconds component
-        return E(operand)["t"].cast("long")
-    if op == "$tsIncrement":
-        return E(operand)["i"].cast("long")
-    raise ValueError(f"unsupported aggregation expression operator {op}")
+def _set_result(arr: Column) -> Column:
+    return F.array_sort(F.array_distinct(arr))
+
+
+#: expression comparisons — also the $lookup pipeline's residual terms
+_CMP = {"$eq": operator.eq, "$ne": operator.ne, "$gt": operator.gt,
+        "$gte": operator.ge, "$lt": operator.lt, "$lte": operator.le}
+
+#: BSON type names (and the numeric codes $convert/$type accept) → the
+#: Spark type this engine stores them as
+_BSON_CODES = {1: "double", 2: "string", 3: "object", 4: "array",
+               5: "binData", 8: "bool", 9: "date", 10: "null",
+               16: "int", 18: "long", 19: "decimal"}
+_BSON_SPARK_TYPES = {"double": "double", "string": "string",
+                     "bool": "boolean", "date": "timestamp", "int": "int",
+                     "long": "long", "decimal": "decimal(38,6)"}
+
+_WEEKDAYS = {d: i for i, d in enumerate((
+    "sunday", "monday", "tuesday", "wednesday", "thursday", "friday",
+    "saturday"))}
+
+#: the ISO 8601 week-date triple ($isoWeekYear/$isoWeek/$isoDayOfWeek and
+#: $dateToParts iso8601): Spark's extract(YEAROFWEEK) and weekofyear ARE
+#: the ISO definitions (Jan 1 can belong to the previous ISO year);
+#: dayofweek's 1=Sunday..7=Saturday maps to ISO 1=Monday..7=Sunday
+_ISO_PARTS = {
+    "isoWeekYear": lambda d: F.extract(F.lit("YEAROFWEEK"), d).cast("long"),
+    "isoWeek": F.weekofyear,
+    "isoDayOfWeek": lambda d: (F.pmod(F.dayofweek(d) + F.lit(5), F.lit(7))
+                               + F.lit(1)),
+}
+
+
+def _millis(d: Column) -> Column:
+    # pmod over floor-div: pre-epoch timestamps must yield 0-999
+    # (Spark's % keeps the dividend sign)
+    return F.pmod(F.floor(F.unix_micros(d) / 1000), F.lit(1000)).cast("int")
+
+
+def _cast_to(bson_type: str):
+    spark_type = _BSON_SPARK_TYPES[bson_type]
+    return lambda c: c.cast(spark_type)
+
+
+#: operators whose body is one Spark call on the compiled operand
+_UNARY = {
+    "$abs": F.abs, "$ceil": F.ceil, "$floor": F.floor, "$sqrt": F.sqrt,
+    "$exp": F.exp, "$ln": F.log, "$log10": F.log10,
+    "$toUpper": F.upper, "$toLower": F.lower, "$strLenCP": F.length,
+    # byte-level string/binary sizing
+    "$strLenBytes": F.octet_length, "$binarySize": F.octet_length,
+    "$year": F.year, "$month": F.month, "$dayOfMonth": F.dayofmonth,
+    "$hour": F.hour, "$minute": F.minute, "$second": F.second,
+    "$dayOfWeek": F.dayofweek, "$dayOfYear": F.dayofyear,
+    "$millisecond": _millis,
+    **{f"${k}": fn for k, fn in _ISO_PARTS.items()},
+    "$size": F.size, "$reverseArray": F.reverse, "$bitNot": F.bitwise_not,
+    # trigonometry (Mongo 4.2 family)
+    "$sin": F.sin, "$cos": F.cos, "$tan": F.tan,
+    "$asin": F.asin, "$acos": F.acos, "$atan": F.atan,
+    "$sinh": F.sinh, "$cosh": F.cosh, "$tanh": F.tanh,
+    "$asinh": F.asinh, "$acosh": F.acosh, "$atanh": F.atanh,
+    "$degreesToRadians": F.radians, "$radiansToDegrees": F.degrees,
+    # BSON timestamp ({t, i} struct per extjson) components
+    "$tsSecond": lambda c: c["t"].cast("long"),
+    "$tsIncrement": lambda c: c["i"].cast("long"),
+    # conversions: plain casts to the stored Spark type
+    "$toInt": _cast_to("int"), "$toLong": _cast_to("long"),
+    "$toDouble": _cast_to("double"), "$toDecimal": _cast_to("decimal"),
+    "$toBool": _cast_to("bool"), "$toDate": _cast_to("date"),
+    "$toString": _cast_to("string"),
+}
+
+
+def _x_let(op, x, E, env):
+    bound = dict(env or {})
+    for name, vexpr in x["vars"].items():
+        bound[name] = E(vexpr)
+    return expr_to_col(x["in"], bound)
+
+
+def _x_round(op, x, E, env):
+    # bround, not round: the server rounds HALF TO EVEN ("uses the
+    # 'round half to even' approach to perform rounding") — Spark's
+    # F.round is half-up, which disagrees on every exact .5
+    # ($round(2.5) is 2 on the server, 3 under half-up).  An expression
+    # place refuses (r11 — previously SILENTLY read as 0).
+    e, places = x if isinstance(x, list) else (x, 0)
+    places = _int_lit(op, "place", places)
+    return F.bround(E(e), places)
+
+
+def _x_trunc(op, x, E, env):
+    e, places = x if isinstance(x, list) else (x, 0)
+    scale = F.lit(float(10 ** _int_lit(op, "places", places)))
+    v = E(e)
+    return (F.when(v >= 0, F.floor(v * scale))
+            .otherwise(F.ceil(v * scale)) / scale)
+
+
+def _x_cmp(op, x, E, env):
+    # null sorts LOWEST in the BSON ordering (SURVEY §1.2), so
+    # $cmp(null, x) is -1, not 0 — a null-propagating `<` would
+    # fall through every when() and return 0 (r10 fix)
+    a, b = x
+    a, b = E(a), E(b)
+    return (F.when(a.isNull() & b.isNull(), 0)
+            .when(a.isNull(), -1).when(b.isNull(), 1)
+            .when(a < b, -1).when(a > b, 1).otherwise(0))
+
+
+def _x_cond(op, x, E, env):
+    cond, then, els = ((x["if"], x["then"], x["else"])
+                       if isinstance(x, dict) else x)
+    return F.when(_truthy(E(cond)), E(then)).otherwise(E(els))
+
+
+def _x_substr_cp(op, x, E, env):
+    s, start, ln = x
+    # Mongo is 0-based, Spark substring is 1-based.  Literal
+    # start/length validate the server's nonnegative rule at compile
+    # time; expression forms compile through (r10 — previously a
+    # non-literal start was SILENTLY read as 0).
+    for nm, v in (("starting index", start), ("length", ln)):
+        if isinstance(v, bool) or (isinstance(v, int) and v < 0):
+            raise ValueError(f"$substrCP: the {nm} must be a "
+                             f"nonnegative integer (got {v!r})")
+    # Expression forms are clamped to >= 0 at runtime (r11, per
+    # ADVICE): the server ERRORS on a negative start/length, but a
+    # raw negative here would silently flip Spark's substring into
+    # count-from-the-end semantics — clamping keeps the result inside
+    # server-reachable space (documented deviation: clamp, not raise).
+    start_c = F.lit(start + 1) if isinstance(start, int) \
+        else (F.greatest(E(start).cast("int"), F.lit(0)) + 1)
+    ln_c = F.lit(ln) if isinstance(ln, int) \
+        else F.greatest(E(ln).cast("int"), F.lit(0))
+    return F.substring(E(s), start_c, ln_c)
+
+
+def _x_split(op, x, E, env):
+    s, delim = x
+    # literal delimiter, not a regex (server semantics); the server
+    # rejects an empty separator outright
+    if not isinstance(delim, str) or delim == "":
+        raise ValueError(
+            "$split requires a non-empty string literal delimiter "
+            f"(got {delim!r})")
+    return F.split(E(s), re.escape(delim))
+
+
+_TRIMS = {"$trim": (F.trim, "^{0}|{0}$"), "$ltrim": (F.ltrim, "^{0}"),
+          "$rtrim": (F.rtrim, "{0}$")}
+
+
+def _x_trim(op, x, E, env):
+    inp = E(x["input"] if isinstance(x, dict) else x)
+    chars = x.get("chars") if isinstance(x, dict) else None
+    fn, pat = _TRIMS[op]
+    if chars is None:
+        return fn(inp)
+    if not isinstance(chars, str):
+        raise ValueError(f"{op} chars must be a string literal")
+    cls = "[" + "".join(re.escape(c) for c in chars) + "]+"
+    return F.regexp_replace(inp, pat.format(cls), "")
+
+
+def _x_index_of_cp(op, x, E, env):
+    s, sub = x[0], x[1]
+    if not isinstance(sub, str) or sub.startswith("$"):
+        raise ValueError("$indexOfCP substring must be a string literal")
+    if len(x) == 2:
+        # instr is 1-based, 0 on miss; Mongo is 0-based, -1 on miss
+        return F.instr(E(s), sub) - 1
+    # range form: search within [start, end) codepoints, result
+    # index relative to the WHOLE string; start past the string end
+    # → -1, but NEGATIVE start/end is an ERROR on the server — raise
+    # at compile time for provably negative literals (runtime-column
+    # operands can't be checked until execution and fall through to
+    # the -1 guard below, a documented softening)
+    for pos_arg in x[2:4]:
+        if (isinstance(pos_arg, (int, float))
+                and not isinstance(pos_arg, bool) and pos_arg < 0):
+            raise ValueError(
+                "$indexOfCP: start/end must be non-negative "
+                f"(got {pos_arg!r}) — server error code 40097")
+    start = E(x[2]).cast("int")
+    text = E(s)
+    end = E(x[3]).cast("int") if len(x) > 3 else F.length(text)
+    region = F.substring(text, start + 1,
+                         F.greatest(end - start, F.lit(0)))
+    pos = F.instr(region, sub)
+    return (F.when((start < 0) | (start > F.length(text)), F.lit(-1))
+            .when(pos == 0, F.lit(-1))
+            .otherwise(pos - 1 + start))
+
+
+def _x_replace_one(op, x, E, env):
+    inp, find = E(x["input"]), E(x["find"])
+    repl = E(x["replacement"])
+    pos = F.instr(inp, find)
+    return F.when(pos == 0, inp).otherwise(F.concat(
+        F.substr(inp, F.lit(1), pos - 1), repl,
+        F.substr(inp, pos + F.length(find), F.length(inp))))
+
+
+def _x_strcasecmp(op, x, E, env):
+    # server semantics: internally UPPERcases (sign differs from
+    # lowercasing for chars in ASCII 91-96, e.g. '_')
+    a, b = F.upper(E(x[0])), F.upper(E(x[1]))
+    return (F.when(a < b, -1).when(a > b, 1).otherwise(0))
+
+
+def _x_get_field(op, x, E, env):
+    # literal field name (server contract); [] works for struct
+    # fields and MAP keys alike
+    if isinstance(x, str):
+        raise ValueError(
+            "$getField shorthand on the root document is not supported"
+            " — use {field, input}")
+    return E(x["input"])[x["field"]]
+
+
+def _x_set_field(op, x, E, env):
+    if op == "$unsetField" or x.get("value") == "$$REMOVE":
+        # server: $unsetField (Mongo 5.0), and $setField with $$REMOVE,
+        # REMOVE the field — for struct inputs dropFields expresses that
+        # exactly, removing a missing field is a no-op (r12; the generic
+        # $$REMOVE→null mapping would have written a null-valued field)
+        return E(x["input"]).dropFields(x["field"])
+    return E(x["input"]).withField(x["field"], E(x["value"]))
+
+
+def _x_merge_objects(op, x, E, env):
+    # MAP-typed dynamic documents; later operands overwrite earlier
+    # keys (server semantics).  map_concat can't express later-wins
+    # portably (dup-key policy is a session conf), so earlier entries
+    # whose key reappears later are filtered before the merge.
+    # Null operands are IGNORED like the server (all-null → {}) —
+    # r11: previously one null operand poisoned the whole merge.
+    merged = None
+    for v in (x if isinstance(x, list) else [x]):
+        ent = F.coalesce(F.map_entries(E(v)), F.array())
+        if merged is None:
+            merged = ent
+            continue
+        nxt = ent
+        kept = F.filter(
+            merged,
+            lambda e: ~F.exists(nxt, lambda n: n["key"] == e["key"]))
+        merged = F.concat(kept, nxt)
+    return F.map_from_entries(merged)
+
+
+def _x_week(op, x, E, env):
+    # Mongo $week is the SUNDAY-start week-of-year (strftime %U:
+    # days before the year's first Sunday are week 0) — NOT the ISO
+    # week, which $isoWeek covers (r11; weekofyear here was ISO).
+    d = E(x)
+    return F.floor((F.dayofyear(d) + F.lit(6)
+                    - (F.dayofweek(d) - F.lit(1))) / F.lit(7)) \
+        .cast("int")
+
+
+def _x_array_elem_at(op, x, E, env):
+    arr, idx = x
+    # element_at is 1-based; negative indexes count from the end in both.
+    # try_element_at: Mongo returns *missing* for an out-of-range index
+    # (plain element_at raises under ANSI mode, which Spark 4 defaults on)
+    if isinstance(idx, int) and not isinstance(idx, bool):
+        return F.try_element_at(E(arr),
+                                F.lit(idx + 1 if idx >= 0 else idx))
+    # expression index (r11 — previously SILENTLY read as 0, the
+    # dangerous ignored-argument kind): same 0-based→1-based shift,
+    # negatives count from the end
+    i = E(idx).cast("int")
+    return F.try_element_at(E(arr), F.when(i >= 0, i + 1).otherwise(i))
+
+
+def _x_in(op, x, E, env):
+    # aggregation equality: null matches null (r11 — array_contains
+    # returns null for a null needle, poisoning the result; the
+    # server finds null elements).  Same eqNullSafe rule as
+    # $indexOfArray.
+    elem, arr = x
+    e = E(elem)
+    return F.exists(E(arr), lambda v: v.eqNullSafe(e))
+
+
+def _x_object_to_array(op, x, E, env):
+    # Dynamic documents are modeled as MAP columns (the only Spark
+    # type whose keys are data, matching Mongo's schemaless objects);
+    # emits the server's [{k, v}, ...] shape in key order.
+    return F.transform(
+        F.map_entries(E(x)),
+        lambda e: F.struct(e["key"].alias("k"), e["value"].alias("v")))
+
+
+def _x_array_to_object(op, x, E, env):
+    # Accepts the {k, v}-struct element form (exactly what
+    # $objectToArray emits, so round-trips compose).  Mongo's
+    # [[k, v], ...] pair form needs runtime element-type dispatch a
+    # compile-time Column can't do — fail loud instead of guessing.
+    if isinstance(x, list):
+        if not (len(x) == 1 and isinstance(x[0], list)):
+            raise ValueError(
+                "$arrayToObject literal form must be [[{k,v}, ...]]; "
+                "the [[key, value], ...] pair form is not supported")
+        if any(isinstance(e, list) for e in x[0]):
+            raise ValueError(
+                "$arrayToObject [[key, value], ...] pair elements are "
+                "not supported — use {k: ..., v: ...} documents")
+        entries = F.array(*[E(e) for e in x[0]])
+    else:
+        entries = E(x)
+    ent = F.transform(entries, lambda v: F.struct(v["k"], v["v"]))
+    # duplicate keys: the server keeps the LAST value; Spark's
+    # map_from_entries THROWS under the default mapKeyDedupPolicy
+    # (a session conf this compiler must not depend on).  Keep each
+    # entry only if no LATER entry shares its key — last-wins, with
+    # each surviving key at its LAST-occurrence position (e.g.
+    # [a,b,a] -> [b,a]); O(entries²) per row on small per-document
+    # arrays.
+    dedup = F.filter(ent, lambda v, i: ~F.exists(
+        F.slice(ent, i + F.lit(2),
+                F.greatest(F.size(ent) - i - 1, F.lit(0))),
+        lambda y: y["k"] == v["k"]))
+    return F.map_from_entries(dedup)
+
+
+def _x_to_object_id(op, x, E, env):
+    # 24-hex validation, NULL through (functions.to_object_id / U1)
+    from mongo_hadoop_spark.functions import to_object_id
+    return to_object_id(E(x))
+
+
+def _x_to_uuid(op, x, E, env):
+    # Mongo 8.0: string → UUID (canonical 8-4-4-4-12 lowercase);
+    # malformed input nulls out, like $toObjectId's convention
+    low = F.lower(E(x))
+    return F.when(low.rlike(
+        "^[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}"
+        "-[0-9a-f]{4}-[0-9a-f]{12}$"), low)
+
+
+def _x_javascript(op, x, E, env):
+    # server-side JavaScript — same standing refusal as $where:
+    # arbitrary JS has no declarative Spark translation, and shipping
+    # an interpreter would put a per-row black box in the hot path
+    raise ValueError(
+        f"{op} runs server-side JavaScript — not supported; express "
+        "the logic as aggregation operators (or mapInPandas outside "
+        "the pipeline language)")
+
+
+def _x_rand(op, x, E, env):
+    # deliberate determinism deviation (the $sample/$sampleRate
+    # precedent, r8): the server draws an independent uniform per
+    # evaluation; here it's a uniform md5 hash of the whole row —
+    # reproducible on any engine/partitioning.  The FIRST $rand in a
+    # pipeline is bit-identical to the $sampleRate gate's fraction,
+    # so {$lt: [{$rand: {}}, r]} composes into exactly that gate's
+    # keep-set; subsequent $rand sites in the same pipeline are
+    # salted by their occurrence index (r10, per ADVICE) so
+    # double-threshold random splits do not silently correlate.
+    # Residual deviation: duplicate rows still draw equal values.
+    if x not in ({}, None):
+        raise ValueError("$rand takes {} (no operands)")
+    seq = _RAND_SEQ.get()
+    idx = next(seq) if seq is not None else 0
+    payload = ("to_json(struct(*))" if idx == 0
+               else f"concat(to_json(struct(*)), '#rand{idx}')")
+    return (F.expr(f"conv(substring(md5({payload}), 1, 15), "
+                   "16, 10)").cast("double") / F.lit(float(2 ** 60)))
+
+
+def _x_convert(op, x, E, env):
+    # the general conversion op: try_cast semantics with onError /
+    # onNull; string/numeric `to` aliases (same table as $type)
+    to = x["to"]
+    to = _BSON_CODES.get(to, to) if isinstance(to, int) else to
+    spark_t = _BSON_SPARK_TYPES.get(to)
+    if spark_t is None:
+        raise ValueError(f"unsupported $convert target type {to!r}")
+    inp = E(x["input"])
+    converted = inp.try_cast(spark_t)
+    if "onError" in x:
+        converted = F.coalesce(converted, E(x["onError"]))
+    if "onNull" in x:
+        return F.when(inp.isNull(), E(x["onNull"])).otherwise(converted)
+    return F.when(inp.isNull(), F.lit(None)).otherwise(converted)
+
+
+def _x_date_from_string(op, x, E, env):
+    fmt = _date_fmt(x.get("format", "%Y-%m-%dT%H:%M:%S"))
+    ds = E(x["dateString"])
+    parsed = F.try_to_timestamp(ds, F.lit(fmt))
+    if "onError" in x:
+        # onError covers PARSE failures only — null input yields
+        # null (or onNull), exactly like $convert above
+        parsed = F.coalesce(parsed, E(x["onError"]))
+    on_null = E(x["onNull"]) if "onNull" in x else F.lit(None)
+    return F.when(ds.isNull(), on_null).otherwise(parsed)
+
+
+# array higher-order ops (compiled to Spark lambda HOFs; the bound
+# variable enters the env as $$this / $$value / the named "as")
+
+
+def _x_map(op, x, E, env):
+    var = x.get("as", "this")
+    return F.transform(
+        E(x["input"]),
+        lambda v: expr_to_col(x["in"], {**(env or {}), var: v, "this": v}))
+
+
+def _x_filter(op, x, E, env):
+    var = x.get("as", "this")
+    filtered = F.filter(
+        E(x["input"]),
+        lambda v: expr_to_col(x["cond"], {**(env or {}), var: v, "this": v}))
+    if x.get("limit") is None:
+        return filtered
+    # Mongo 5.2 limit: first n matches (previously IGNORED silently)
+    return F.slice(filtered, 1, _int_lit(op, "limit", x["limit"], least=1))
+
+
+def _x_reduce(op, x, E, env):
+    arr = E(x["input"])
+    init = E(x["initialValue"])
+    # Server typing is dynamic (the accumulator promotes per
+    # element), but Spark's aggregate() requires the zero to ALREADY
+    # carry the merge expression's result type — {$reduce: {input:
+    # "$longs", initialValue: 0, in: {$add: [...]}}} used to fail
+    # analysis with INT zero vs BIGINT merge.  Resolve the merge
+    # type symbolically: apply the in-expression once to (init,
+    # first element) inside a never-taken branch; when(false,
+    # probe).otherwise(init) analyzes to the least-common type with
+    # init's value, and SimplifyConditionals folds the dead branch
+    # out of the physical plan.  F.get (not element_at) keeps the
+    # probe null-safe even if it were ever evaluated under ANSI.
+    # the probe is a THROWAWAY compile of the in-expression: shield
+    # the $rand occurrence sequence so it does not consume an index
+    # and shift every later $rand site's salt (review fix, r12)
+    probe_tok = _RAND_SEQ.set(None)
+    try:
+        probe = expr_to_col(
+            x["in"],
+            {**(env or {}), "value": init, "this": F.get(arr, F.lit(0))})
+    finally:
+        _RAND_SEQ.reset(probe_tok)
+    zero = F.when(F.lit(False), probe).otherwise(init)
+    return F.aggregate(
+        arr, zero,
+        lambda acc, v: expr_to_col(
+            x["in"], {**(env or {}), "value": acc, "this": v}))
+
+
+def _x_switch(op, x, E, env):
+    # server: "$switch requires at least one branch" (r12 — an empty
+    # branches list previously crashed with AttributeError on None)
+    if not x.get("branches"):
+        raise ValueError("$switch requires at least one branch")
+    out = None
+    for br in x["branches"]:
+        _check_spec_keys("$switch branch", br, {"case", "then"})
+        c, t = _truthy(E(br["case"])), E(br["then"])
+        out = F.when(c, t) if out is None else out.when(c, t)
+    if "default" in x:
+        return out.otherwise(E(x["default"]))
+    # no default + no matching branch is a SERVER ERROR (r11 —
+    # previously fell through to null, the dangerous silent kind);
+    # raise_error reproduces the fail-the-query behavior per row
+    return out.otherwise(F.raise_error(F.lit(
+        "$switch could not find a matching branch for an input, "
+        "and no default was specified")))
+
+
+def _x_range(op, x, E, env):
+    start_, end_ = E(x[0]), E(x[1])
+    step = _int_lit(op, "step", x[2]) if len(x) > 2 else 1
+    if step == 0:
+        raise ValueError("$range step must be a nonzero integer literal")
+    # Mongo excludes the end bound; sequence() includes it
+    return F.when(
+        (end_ - start_) * F.lit(step) <= 0, F.array().cast("array<int>")
+    ).otherwise(
+        F.sequence(start_.cast("int"),
+                   (end_ - F.lit(1 if step > 0 else -1)).cast("int"),
+                   F.lit(step)))
+
+
+def _x_sort_array(op, x, E, env):
+    by = x.get("sortBy", 1)
+    if isinstance(by, dict):
+        # document sort keys over struct elements (r12): the same
+        # multi-key -1/0/1 comparator the $lookup sub-pipeline
+        # $sort uses — BSON null ordering (nulls first ascending,
+        # last descending) per key, later keys tie-break
+        if not by or not all(
+                not isinstance(d, bool) and d in (1, -1)
+                for d in by.values()):
+            raise ValueError(
+                "$sortArray document sortBy values must be 1 or -1")
+        return F.array_sort(E(x["input"]), _array_sort_comparator(by))
+    if not isinstance(by, int):
+        raise ValueError(
+            "$sortArray sortBy must be 1/-1 or a {field: 1|-1} document")
+    return F.sort_array(E(x["input"]), asc=by >= 0)
+
+
+def _x_zip(op, x, E, env):
+    inputs = [E(v) for v in x["inputs"]]
+    # server rule (both forms): if ANY input resolves to null or a
+    # missing field, the whole $zip is null — not empty/padded
+    nn = _fold_and([c.isNotNull() for c in inputs])
+    if x.get("useLongestLength"):
+        # pad to the longest input; per-input default (or null)
+        # fills the missing tail — Spark arrays are homogeneous, so
+        # inputs (and defaults) must share element type
+        defaults = x.get("defaults")
+        if defaults is not None and len(defaults) != len(inputs):
+            raise ValueError("$zip defaults must match inputs length")
+        longest = (F.size(inputs[0]) if len(inputs) == 1
+                   else F.greatest(*[F.size(c) for c in inputs]))
+        dflt = [E(defaults[j]) if defaults is not None else F.lit(None)
+                for j in range(len(inputs))]
+        return F.when(nn, F.transform(
+            F.filter(F.sequence(F.lit(1), F.greatest(longest, F.lit(1))),
+                     lambda i: i <= longest),
+            lambda i: F.array(*[
+                F.when(i <= F.size(c), F.element_at(c, i))
+                .otherwise(d) for c, d in zip(inputs, dflt)])))
+    # Mongo yields array-of-arrays truncated to the shortest input;
+    # Spark arrays are homogeneous, so inputs must share element type
+    shortest = (F.size(inputs[0]) if len(inputs) == 1
+                else F.least(*[F.size(c) for c in inputs]))
+    # shortest == 0 must yield [] — sequence(1, 0) would count DOWN
+    # ([1, 0]) and element_at(col, 0) raises at runtime.  Clamp the
+    # sequence end to ≥1 and filter out-of-range indexes so the
+    # transform lambda never sees an invalid index.
+    return F.when(nn, F.transform(
+        F.filter(F.sequence(F.lit(1), F.greatest(shortest, F.lit(1))),
+                 lambda i: i <= shortest),
+        lambda i: F.array(*[F.element_at(c, i) for c in inputs])))
+
+
+def _take_n(op: str, arr: Column, n: int) -> Column:
+    """$firstN/$lastN/$minN/$maxN over an array Column — shared by the
+    expression form and the group/window accumulator (`_n_accumulator`).
+    $minN/$maxN order smallest-first (resp. largest-first)."""
+    if op in ("$minN", "$maxN"):
+        return F.slice(F.sort_array(arr, asc=(op == "$minN")), 1, n)
+    if op == "$firstN":
+        return F.slice(arr, 1, n)
+    return F.reverse(F.slice(F.reverse(arr), 1, n))
+
+
+def _x_n(op, x, E, env):
+    n = _int_lit(op, "n", x["n"], least=1)
+    arr = E(x["input"])
+    if op in ("$minN", "$maxN"):
+        # nulls/missing are not $minN/$maxN candidates (server)
+        arr = F.filter(arr, lambda v: v.isNotNull())
+    return _take_n(op, arr, n)
+
+
+_DT_UNITS = {"day": "days", "hour": "hours", "minute": "mins",
+             "second": "secs"}
+
+
+def _x_date_shift(op, x, E, env):
+    # $dateAdd / $dateSubtract (timezone-naive caveat: Spark applies the
+    # session timezone where the server would use the `timezone` arg;
+    # keep sessions in a fixed TZ or use epoch math for cross-engine work)
+    unit = x["unit"]
+    amount = _int_lit(op, "amount", x["amount"])
+    shift = operator.add if op == "$dateAdd" else operator.sub
+    if unit in ("year", "quarter", "month", "week"):
+        # calendar-aware: timestamp ± year-month/week interval
+        # (end-of-month clamping matches the server: Jan 31 + 1
+        # month = Feb 28/29)
+        months = {"year": 12, "quarter": 3, "month": 1}.get(unit)
+        iv = (F.make_interval(months=F.lit(amount * months))
+              if months else F.make_interval(weeks=F.lit(amount)))
+        return shift(E(x["startDate"]), iv)
+    if unit == "millisecond":
+        # exact epoch-millis arithmetic (a dt-interval of
+        # amount/1000 s would round through binary fractions)
+        ts = E(x["startDate"]).cast("timestamp")
+        return F.timestamp_millis(shift(F.unix_millis(ts), F.lit(amount)))
+    if unit not in _DT_UNITS:
+        raise ValueError(f"unsupported {op} unit {unit!r}")
+    return shift(E(x["startDate"]),
+                 F.make_dt_interval(**{_DT_UNITS[unit]: F.lit(amount)}))
+
+
+def _x_index_of_array(op, x, E, env):
+    arr, search = x[0], x[1]
+
+    # Null-safe 0-based first-match scan (r11, per ADVICE): the server
+    # compares with aggregation equality, under which null == null, so
+    # a null search value FINDS null elements (and misses → -1) — it
+    # does not poison the result.  array_position cannot express that
+    # (null search → null), so both forms share one eqNullSafe fold;
+    # a null ARRAY still yields null (HOFs propagate null input).
+    def _nullsafe_idx(window, needle):
+        indexed = F.transform(
+            window, lambda v, i: F.struct(v.alias("v"), i.alias("i")))
+        return F.aggregate(
+            indexed, F.lit(-1),
+            lambda acc, s: F.when(
+                (acc == -1) & s["v"].eqNullSafe(needle),
+                s["i"].cast("int")).otherwise(acc))
+
+    if len(x) == 2:
+        return _nullsafe_idx(E(arr), E(search))
+    # 4-arg range form (search within [start, end)); index reported
+    # against the ORIGINAL array — previously the extra args were
+    # IGNORED silently (r10)
+    start = _int_lit(op, "start", x[2], least=0)
+    end = x[3] if len(x) > 3 else None
+    if end is not None:
+        end = _int_lit(op, "end", end, least=0)
+    a = E(arr)
+    window = (F.slice(a, start + 1, F.greatest(F.size(a) - start, F.lit(0)))
+              if end is None
+              else F.slice(a, start + 1, max(end - start, 0)))
+    pos = _nullsafe_idx(window, E(search))
+    return F.when(pos >= 0, (pos + start).cast("int")) \
+        .otherwise(F.when(a.isNotNull(), F.lit(-1)).cast("int"))
+
+
+def _x_slice(op, x, E, env):
+    if len(x) == 2:
+        arr, n = E(x[0]), _int_lit(op, "count", x[1])
+        return F.slice(arr, 1, n) if n >= 0 else F.slice(arr, n, -n)
+    arr = E(x[0])
+    pos = _int_lit(op, "position", x[1])
+    n = _int_lit(op, "count", x[2], least=0)
+    return F.slice(arr, pos + 1 if pos >= 0 else pos, n)
+
+
+# --- array-form accumulator expressions (Mongo 5.2/7.0: in a
+# $project/$addFields context, $min/$max/$sum/$avg & friends accept
+# an ARRAY operand and aggregate its elements per row) -------------
+
+
+def _x_min_max(op, x, E, env):
+    if isinstance(x, list):
+        return (F.greatest if op == "$max" else F.least)(*[E(v) for v in x])
+    # scalar-LITERAL operands pass through like the server (r11 —
+    # {$max: 5} is 5 per row, {$min: "abc"} is "abc"; previously
+    # these hit array_max/array_min and failed Spark analysis).
+    # Scalar-typed FIELD PATHS are dispatched schema-aware in
+    # ``_project_expr``; here a field-path/computed operand is
+    # assumed to be an array.
+    if (x is None or isinstance(x, (bool, int, float))
+            or (isinstance(x, str) and not x.startswith("$"))):
+        return F.lit(x)
+    return F.array_max(E(x)) if op == "$max" else F.array_min(E(x))
+
+
+def _x_sum_avg(op, x, E, env):
+    if isinstance(x, list):
+        raise _unsupported(op)
+    # scalar-literal operands pass through like the server ({$sum: 1}
+    # → 1 per row; non-numeric scalar → 0 for $sum, null for $avg) —
+    # only field-path/computed operands are treated as arrays below
+    if (isinstance(x, bool)
+            or (isinstance(x, str) and not x.startswith("$"))
+            or not isinstance(x, (int, float, str, dict))):
+        return F.lit(0) if op == "$sum" else F.lit(None)
+    if isinstance(x, (int, float)):
+        return F.lit(x)
+    # NOTE: scalar-typed FIELD PATHS ({$sum: "$price"} on a
+    # non-array column — server pass-through) are dispatched
+    # schema-aware in ``_project_expr``; here the type is unknown,
+    # so a field-path operand is assumed to be an array and a
+    # scalar one fails Spark analysis at plan time.
+    # per-row fold over the array, LEFT-TO-RIGHT (determinism:
+    # float addition is order-sensitive; a fold has one order) —
+    # nulls ignored like the server; $sum of an empty array is 0,
+    # $avg is null
+    arr = F.filter(E(x), lambda v: v.isNotNull())
+    total = F.aggregate(arr, F.lit(0.0),
+                        lambda acc, v: acc + v.cast("double"))
+    if op == "$sum":
+        # a NULL/missing operand sums to 0 like the server ($sum
+        # "returns 0 if all operands are non-numeric") — without
+        # the coalesce a null ARRAY column propagated null (r10
+        # review finding), diverging from the scalar pass-through
+        return F.coalesce(total, F.lit(0.0))
+    n = F.size(arr)
+    return F.when(n > 0, total / n.cast("double"))
+
+
+def _x_std_dev(op, x, E, env):
+    # sum/sum-of-squares folds (deterministic order both engines);
+    # E[x^2] - E[x]^2 form, clamped at 0 against rounding
+    arr = F.filter(E(x), lambda v: v.isNotNull())
+    n = F.size(arr).cast("double")
+    s = F.aggregate(arr, F.lit(0.0), lambda acc, v: acc + v.cast("double"))
+    s2 = F.aggregate(arr, F.lit(0.0),
+                     lambda acc, v: acc + v.cast("double") * v.cast("double"))
+    denom = n if op == "$stdDevPop" else n - F.lit(1.0)
+    var = (s2 - s * s / n) / denom
+    return F.when(denom > 0, F.sqrt(F.greatest(var, F.lit(0.0))))
+
+
+def _x_median(op, x, E, env):
+    # expression form over an array; engine deviation (documented):
+    # the server's method is an approximate t-digest, this is the
+    # EXACT discrete lower median sorted[ceil(n/2)] — deterministic
+    # and oracle-gateable (quantile_disc semantics)
+    if isinstance(x, dict):
+        x = x["input"]
+    arr = F.sort_array(F.filter(E(x), lambda v: v.isNotNull()))
+    n = F.size(arr)
+    return F.when(n > 0, F.get(arr, F.ceil(n / 2).cast("int") - 1))
+
+
+def _x_percentile(op, x, E, env):
+    # expression form over an array (Mongo 7.0): one value per
+    # requested p, as an array.  Same documented deviation as
+    # $median: exact discrete (sorted[ceil(p*n)], the
+    # percentile_disc convention) vs the server's t-digest.
+    ps = x["p"]
+    if not (isinstance(ps, list) and
+            all(isinstance(p, (int, float)) for p in ps)):
+        raise ValueError("$percentile p must be a list of numeric literals")
+    arr = F.sort_array(F.filter(E(x["input"]), lambda v: v.isNotNull()))
+    n = F.size(arr)
+    vals = [F.get(arr, F.greatest(
+        F.ceil(n * F.lit(float(p))).cast("int"), F.lit(1)) - 1)
+        for p in ps]
+    return F.when(n > 0, F.array(*vals))
+
+
+def _x_first_last(op, x, E, env):
+    if isinstance(x, list):
+        raise _unsupported(op)
+    arr = E(x)
+    return F.get(arr, 0) if op == "$first" else F.get(arr, F.size(arr) - 1)
+
+
+def _week_start(op: str, x: dict) -> int:
+    """``startOfWeek`` (server default Sunday) → 0=Sunday..6=Saturday."""
+    sow = str(x.get("startOfWeek", "Sunday")).lower()
+    if sow not in _WEEKDAYS:
+        raise ValueError(
+            f"{op}: unknown startOfWeek {x.get('startOfWeek')!r}")
+    return _WEEKDAYS[sow]
+
+
+def _days_into_week(d: Column, start: int) -> Column:
+    # days since the week start: dayofweek is 1=Sun..7=Sat
+    return (F.dayofweek(d) + F.lit(6 - start)) % 7
+
+
+def _x_date_trunc(op, x, E, env):
+    unit = x["unit"]
+    if unit not in ("year", "quarter", "month", "week", "day", "hour",
+                    "minute", "second"):
+        raise ValueError(f"unsupported $dateTrunc unit {unit!r}")
+    bin_size = _int_lit(op, "binSize", x.get("binSize", 1), least=1)
+    start = _week_start(op, x) if unit == "week" else None
+    v = E(x["date"])
+    # fixed-length units take pure epoch arithmetic for EVERY
+    # binSize (r10, per ADVICE): binSize=1 is just the degenerate
+    # bin, and the old date_trunc fallback truncated to
+    # session-LOCAL boundaries where binSize>1 used UTC ones — the
+    # two modes disagreed under a non-UTC session TZ.  The anchor
+    # 946684800 (2000-01-01T00:00Z) is a multiple of 86400, so
+    # binSize=1 day is exact UTC-midnight truncation (server
+    # default timezone), likewise hour/minute/second.
+    if unit in ("second", "minute", "hour", "day"):
+        secs = {"second": 1, "minute": 60, "hour": 3600,
+                "day": 86400}[unit] * bin_size
+        e2k = F.unix_timestamp(v) - F.lit(946684800)
+        binned = (F.floor(e2k / F.lit(secs)) * F.lit(secs)
+                  + F.lit(946684800))
+        return F.timestamp_seconds(binned)
+    if bin_size > 1:
+        # calendar units, binSize form (Mongo 5.0): bins anchored at
+        # the server's reference instant 2000-01-01T00:00:00 (for
+        # week: the startOfWeek on or before it) via day/month-index
+        # arithmetic.  The to_date/year/month field extraction is
+        # session-TZ-interpreted — consistent with the binSize=1
+        # calendar path below (both modes agree under any one
+        # session TZ; keep sessions UTC for server parity).
+        if unit == "week":
+            # 2000-01-01 is a Saturday (dayofweek index 6); anchor
+            # on the startOfWeek on-or-before it
+            anchor = F.date_sub(F.lit("2000-01-01").cast("date"),
+                                (6 - start) % 7)
+            days = F.datediff(F.to_date(v), anchor)
+            step = 7 * bin_size
+            return F.date_add(
+                anchor, (F.floor(days / F.lit(step))
+                         * F.lit(step)).cast("int")).cast("timestamp")
+        step_m = {"month": 1, "quarter": 3, "year": 12}[unit] * bin_size
+        midx = (F.year(v) - F.lit(2000)) * 12 + F.month(v) - F.lit(1)
+        snapped = (F.floor(midx / F.lit(step_m)) * F.lit(step_m)).cast("int")
+        return F.add_months(F.lit("2000-01-01").cast("date"),
+                            snapped).cast("timestamp")
+    if unit == "week":
+        # server semantics: truncate to the startOfWeek (default
+        # Sunday) midnight — Spark's date_trunc('week') is
+        # hard-anchored to Monday, so do it with day arithmetic
+        return F.date_sub(F.to_date(v),
+                          _days_into_week(v, start)).cast("timestamp")
+    return F.date_trunc(unit, v)
+
+
+def _x_date_diff(op, x, E, env):
+    # the server counts UNIT-BOUNDARY CROSSINGS, not elapsed floors
+    unit = x["unit"]
+    a, b = E(x["startDate"]), E(x["endDate"])
+    if unit == "year":
+        return (F.year(b) - F.year(a)).cast("long")
+    if unit == "quarter":
+        return ((F.year(b) - F.year(a)) * 4
+                + (F.quarter(b) - F.quarter(a))).cast("long")
+    if unit == "month":
+        return ((F.year(b) - F.year(a)) * 12
+                + (F.month(b) - F.month(a))).cast("long")
+    if unit == "day":
+        return F.datediff(b, a).cast("long")
+    if unit == "week":
+        # startOfWeek-boundary crossings (server semantics, default
+        # Sunday): align each endpoint back to its week start, then
+        # the day gap is an exact multiple of 7.  Saturday→Sunday is
+        # 1 under the default, not 0 (elapsed-block floor would say 0).
+        start = _week_start(op, x)
+        return (F.datediff(F.date_sub(b, _days_into_week(b, start)),
+                           F.date_sub(a, _days_into_week(a, start)))
+                / 7).cast("long")
+    if unit in ("hour", "minute", "second"):
+        div = {"hour": 3600, "minute": 60, "second": 1}[unit]
+        ta = F.unix_timestamp(F.date_trunc(unit, a))
+        tb = F.unix_timestamp(F.date_trunc(unit, b))
+        return ((tb - ta) / div).cast("long")
+    if unit == "millisecond":
+        return (F.unix_millis(b.cast("timestamp"))
+                - F.unix_millis(a.cast("timestamp"))).cast("long")
+    raise ValueError(f"unsupported $dateDiff unit {unit!r}")
+
+
+def _x_date_to_string(op, x, E, env):
+    fmt = _date_fmt(x.get("format", "%Y-%m-%dT%H:%M:%S"))
+    d = E(x["date"])
+    s = F.date_format(d, fmt)
+    if "onNull" in x:
+        # r12 audit: previously silently ignored (the no-onNull
+        # behavior — null in, null out — happened to coincide)
+        return F.when(d.isNull(), E(x["onNull"])).otherwise(s)
+    return s
+
+
+def _x_date_to_parts(op, x, E, env):
+    d = E(x["date"] if isinstance(x, dict) else x)
+    ms = _millis(d).alias("millisecond")
+    if isinstance(x, dict) and x.get("iso8601"):
+        # iso8601: true swaps the calendar fields for the ISO
+        # week-date triple (r11 — previously SILENTLY ignored)
+        return F.struct(
+            *[fn(d).alias(k) for k, fn in _ISO_PARTS.items()],
+            F.hour(d).alias("hour"), F.minute(d).alias("minute"),
+            F.second(d).alias("second"), ms)
+    return F.struct(
+        F.year(d).alias("year"), F.month(d).alias("month"),
+        F.dayofmonth(d).alias("day"), F.hour(d).alias("hour"),
+        F.minute(d).alias("minute"), F.second(d).alias("second"), ms)
+
+
+def _x_date_from_parts(op, x, E, env):
+    # session-TZ caveat as with the other date ops (documented)
+    unsupported = {"isoWeekYear", "isoWeek", "isoDayOfWeek",
+                   "timezone"} & x.keys()
+    if unsupported:
+        # refuse loudly (r11) — previously these were silently
+        # dropped, assembling a different instant than asked for
+        raise ValueError(
+            f"$dateFromParts fields {sorted(unsupported)} are "
+            "unsupported (ISO week-date form and timezone)")
+    parts = {k: E(x[k]) if k in x else F.lit(d)
+             for k, d in (("year", 2000), ("month", 1), ("day", 1),
+                          ("hour", 0), ("minute", 0), ("second", 0))}
+    ts = F.make_timestamp(parts["year"], parts["month"], parts["day"],
+                          parts["hour"], parts["minute"], parts["second"])
+    if "millisecond" in x:
+        # carried via microsecond arithmetic (r11 — previously
+        # silently dropped); server allows out-of-range carry
+        ts = F.timestamp_micros(
+            F.unix_micros(ts) + (E(x["millisecond"]).cast("long") * 1000))
+    return ts
+
+
+def _x_meta(op, x, E, env):
+    # search-stage metadata: resolved from the hidden columns the
+    # $vectorSearch / $geoNear stages attach (server: index metadata)
+    meta_cols = {"vectorSearchScore": _VS_SCORE_COL,
+                 "geoNearDistance": _GEO_DIST_COL,
+                 "searchScore": _SEARCH_SCORE_COL,
+                 "searchHighlights": _SEARCH_HIGHLIGHTS_COL,
+                 "textScore": _TEXT_SCORE_COL,
+                 "score": _FUSION_SCORE_COL}
+    if x not in meta_cols:
+        raise ValueError(
+            f"unsupported aggregation expression $meta kind {x!r}")
+    return F.col(meta_cols[x])
+
+
+# type introspection: Spark column types are static, but $type/$isNumber
+# are about the *runtime* value, which matters for untyped/variant-ish
+# columns; the runtime `typeof()` answers both and collapses to a
+# constant after Catalyst constant-folding when the input type is fixed.
+
+
+def _x_type(op, x, E, env):
+    t = F.call_function("typeof", E(x))
+    return (F.when(E(x).isNull(), "null")
+             .when(t == "string", "string")
+             .when(t.isin("int", "smallint", "tinyint"), "int")
+             .when(t == "bigint", "long")
+             .when(t.isin("double", "float"), "double")
+             .when(t.startswith("decimal"), "decimal")
+             .when(t == "boolean", "bool")
+             .when(t.isin("timestamp", "timestamp_ntz", "date"), "date")
+             .when(t.startswith("array"), "array")
+             .when(t.startswith("struct") | t.startswith("map"), "object")
+             .when(t == "binary", "binData")
+             .otherwise(t))
+
+
+def _x_is_number(op, x, E, env):
+    t = F.call_function("typeof", E(x))
+    return (E(x).isNotNull()
+            & (t.isin("int", "smallint", "tinyint", "bigint",
+                      "double", "float") | t.startswith("decimal")))
+
+
+def _x_is_array(op, x, E, env):
+    t = F.call_function("typeof", E(_single(x)))
+    return E(_single(x)).isNotNull() & t.startswith("array")
+
+
+def _x_substr_bytes(op, x, E, env):
+    # byte-indexed substring: slice the UTF-8 encoding, decode back.
+    # Documented deviation: the server ERRORS when an index splits a
+    # multi-byte character; here the decode yields replacement chars
+    # instead (no declarative way to raise per-row).
+    s, start, count = (E(x[0]), E(x[1]), E(x[2]))
+    return F.decode(
+        F.substring(F.encode(s, "UTF-8"), start + F.lit(1), count),
+        "UTF-8")
+
+
+def _x_index_of_bytes(op, x, E, env):
+    # byte offset of the first occurrence (−1 if absent), optional
+    # [start, end] byte range.  Byte positions come from the latin1
+    # trick: ISO-8859-1 decodes bytes 1:1 to chars, so instr over
+    # the latin1 view counts BYTES (Spark's position/instr coerce
+    # binary operands back to UTF-8 strings, which would count
+    # characters instead).
+    args = x if isinstance(x, list) else [x]
+
+    def _bytes_view(c):
+        return F.decode(F.encode(c, "UTF-8"), "ISO-8859-1")
+
+    sb, subb = _bytes_view(E(args[0])), _bytes_view(E(args[1]))
+    if len(args) > 2:
+        start = E(args[2])
+        end = E(args[3]) if len(args) > 3 else F.length(sb)
+        window = F.substring(sb, start + F.lit(1),
+                             F.greatest(end - start, F.lit(0)))
+        pos = F.instr(window, subb)
+        return F.when(pos > 0, pos - 1 + start).otherwise(F.lit(-1))
+    return F.instr(sb, subb) - F.lit(1)
 
 
 def _regex_pattern(operand: dict) -> str:
@@ -1371,7 +1289,7 @@ def _regex_pattern(operand: dict) -> str:
     return pat
 
 
-def _regex_find(op: str, operand: dict, E) -> Column:
+def _regex_find(op: str, operand: dict, E, env=None) -> Column:
     """``$regexFind`` / ``$regexFindAll`` (Mongo 4.2).
 
     Returns the server's document shape ``{match, idx, captures}`` — ``idx``
@@ -1384,10 +1302,8 @@ def _regex_find(op: str, operand: dict, E) -> Column:
     regexp_extract_all + an ``aggregate`` fold for per-match offsets); no
     shuffle, stays inside whole-stage codegen.
     """
-    import re as _re
-
     pat = _regex_pattern(operand)
-    ngroups = _re.compile(pat).groups
+    ngroups = re.compile(pat).groups
     s = E(operand["input"])
     lit = F.lit(pat)
     if op == "$regexFind":
@@ -1439,6 +1355,146 @@ def _regex_find(op: str, operand: dict, E) -> Column:
     return F.transform(entries, lambda e: F.struct(
         e["match"].alias("match"), e["idx"].alias("idx"),
         F.array().cast("array<string>").alias("captures")))
+
+
+#: every aggregation expression operator, exactly once: its compile
+#: function, its dict-operand argument set and its UTC-only flag
+#: (see :class:`ExprSpec`); `expr_to_col` dispatches here and
+#: `_accumulator` / `_stage_set_window_fields` read argument sets here
+_EXPR_OPS: dict[str, ExprSpec] = {
+    **{op: _spec(_unary(fn)) for op, fn in _UNARY.items()},
+    **{op: _spec(_binary(fn)) for op, fn in _CMP.items()},
+    "$literal": _spec(lambda op, x, E, env: F.lit(x)),
+    "$let": _spec(_x_let, "vars in"),
+    # arithmetic
+    "$add": _spec(_fold(operator.add)),
+    "$multiply": _spec(_fold(operator.mul)),
+    "$subtract": _spec(_binary(operator.sub)),
+    "$divide": _spec(_binary(operator.truediv)),
+    "$mod": _spec(_binary(operator.mod)),
+    "$pow": _spec(_binary(F.pow)),
+    "$atan2": _spec(_binary(F.atan2)),
+    "$log": _spec(_binary(lambda num, base: F.log(num) / F.log(base))),
+    "$round": _spec(_x_round),
+    "$trunc": _spec(_x_trunc),
+    "$cmp": _spec(_x_cmp),
+    # boolean (operands coerced with Mongo truthiness: null/0 → false)
+    "$and": _spec(_fold(operator.and_, each=_truthy)),
+    "$or": _spec(_fold(operator.or_, each=_truthy)),
+    "$not": _spec(lambda op, x, E, env: ~_truthy(E(_single(x)))),
+    # conditional
+    "$cond": _spec(_x_cond, "if then else"),
+    "$ifNull": _spec(_nary(F.coalesce)),
+    "$switch": _spec(_x_switch, "branches default"),
+    # string
+    "$concat": _spec(_nary(F.concat)),
+    "$substrCP": _spec(_x_substr_cp),
+    "$split": _spec(_x_split),
+    **{op: _spec(_x_trim, "input chars") for op in _TRIMS},
+    "$indexOfCP": _spec(_x_index_of_cp),
+    "$replaceAll": _spec(lambda op, x, E, env: F.replace(
+        E(x["input"]), E(x["find"]), E(x["replacement"])),
+        "input find replacement"),
+    "$replaceOne": _spec(_x_replace_one, "input find replacement"),
+    "$strcasecmp": _spec(_x_strcasecmp),
+    "$substrBytes": _spec(_x_substr_bytes),
+    "$indexOfBytes": _spec(_x_index_of_bytes),
+    "$regexMatch": _spec(lambda op, x, E, env: E(x["input"]).rlike(
+        _regex_pattern(x)), "input regex options"),
+    "$regexFind": _spec(_regex_find, "input regex options"),
+    "$regexFindAll": _spec(_regex_find, "input regex options"),
+    # objects (struct fields; MAP-typed dynamic documents)
+    "$getField": _spec(_x_get_field, "field input"),
+    "$setField": _spec(_x_set_field, "field input value"),
+    "$unsetField": _spec(_x_set_field, "field input"),
+    "$mergeObjects": _spec(_x_merge_objects),
+    "$objectToArray": _spec(_x_object_to_array),
+    "$arrayToObject": _spec(_x_array_to_object),
+    # dates
+    "$week": _spec(_x_week),
+    "$dateAdd": _spec(_x_date_shift, "startDate unit amount timezone",
+                      utc_only=True),
+    "$dateSubtract": _spec(_x_date_shift, "startDate unit amount timezone",
+                           utc_only=True),
+    "$dateTrunc": _spec(_x_date_trunc,
+                        "date unit binSize timezone startOfWeek",
+                        utc_only=True),
+    "$dateDiff": _spec(_x_date_diff,
+                       "startDate endDate unit timezone startOfWeek",
+                       utc_only=True),
+    "$dateToString": _spec(_x_date_to_string,
+                           "date format timezone onNull", utc_only=True),
+    "$dateFromString": _spec(_x_date_from_string,
+                             "dateString format timezone onError onNull",
+                             utc_only=True),
+    "$dateToParts": _spec(_x_date_to_parts, "date timezone iso8601",
+                          utc_only=True),
+    # ISO week-date parts and timezone keep their informative refusal
+    "$dateFromParts": _spec(_x_date_from_parts,
+                            "year month day hour minute second millisecond"
+                            " isoWeekYear isoWeek isoDayOfWeek timezone"),
+    # arrays and sets
+    "$arrayElemAt": _spec(_x_array_elem_at),
+    "$concatArrays": _spec(_nary(F.concat)),
+    "$in": _spec(_x_in),
+    "$indexOfArray": _spec(_x_index_of_array),
+    "$slice": _spec(_x_slice),
+    "$range": _spec(_x_range),
+    "$sortArray": _spec(_x_sort_array, "input sortBy"),
+    "$zip": _spec(_x_zip, "inputs useLongestLength defaults"),
+    "$map": _spec(_x_map, "input as in"),
+    "$filter": _spec(_x_filter, "input cond as limit"),
+    "$reduce": _spec(_x_reduce, "input initialValue in"),
+    "$setUnion": _spec(_fold(F.array_union, done=_set_result)),
+    "$setIntersection": _spec(_fold(F.array_intersect, done=_set_result)),
+    "$setDifference": _spec(_binary(
+        lambda a, b: _set_result(F.array_except(a, b)))),
+    "$setIsSubset": _spec(_binary(
+        lambda a, b: F.size(F.array_except(F.array_distinct(a), b)) == 0)),
+    "$setEquals": _spec(_binary(
+        lambda a, b: (F.size(F.array_except(a, b)) == 0)
+        & (F.size(F.array_except(b, a)) == 0))),
+    "$allElementsTrue": _spec(
+        lambda op, x, E, env: F.forall(E(_single(x)), _truthy)),
+    "$anyElementTrue": _spec(
+        lambda op, x, E, env: F.exists(E(_single(x)), _truthy)),
+    # array-form accumulator expressions ($median/$percentile: the
+    # method argument is accepted and ignored, a documented deviation)
+    "$max": _spec(_x_min_max),
+    "$min": _spec(_x_min_max),
+    "$sum": _spec(_x_sum_avg),
+    "$avg": _spec(_x_sum_avg),
+    "$stdDevPop": _spec(_x_std_dev),
+    "$stdDevSamp": _spec(_x_std_dev),
+    "$median": _spec(_x_median, "input method"),
+    "$percentile": _spec(_x_percentile, "input p method"),
+    "$first": _spec(_x_first_last),
+    "$last": _spec(_x_first_last),
+    **{op: _spec(_x_n, "input n")
+       for op in ("$firstN", "$lastN", "$minN", "$maxN")},
+    # group/window-only accumulators: arguments checked, no expression form
+    "$top": _spec(None, "sortBy output"),
+    "$bottom": _spec(None, "sortBy output"),
+    "$topN": _spec(None, "sortBy output n"),
+    "$bottomN": _spec(None, "sortBy output n"),
+    # conversions
+    "$convert": _spec(_x_convert, "input to onError onNull"),
+    "$toObjectId": _spec(_x_to_object_id),
+    "$toUUID": _spec(_x_to_uuid),
+    # type introspection
+    "$type": _spec(_x_type),
+    "$isNumber": _spec(_x_is_number),
+    "$isArray": _spec(_x_is_array),
+    # bitwise integer family (Mongo 6.3)
+    "$bitAnd": _spec(_fold(lambda a, b: a.bitwiseAND(b))),
+    "$bitOr": _spec(_fold(lambda a, b: a.bitwiseOR(b))),
+    "$bitXor": _spec(_fold(lambda a, b: a.bitwiseXOR(b))),
+    # miscellaneous
+    "$rand": _spec(_x_rand),
+    "$meta": _spec(_x_meta),
+    "$function": _spec(_x_javascript),
+    "$accumulator": _spec(_x_javascript),
+}
 
 
 # ---------------------------------------------------------------------------
@@ -1895,15 +1951,11 @@ def _match_op_col(col: Column, op: str, operand) -> Column:
         return anded != F.lit(mask)   # $bitsAnyClear
     if op == "$type":
         aliases = operand if isinstance(operand, list) else [operand]
-        # numeric BSON type codes → string aliases
-        codes = {1: "double", 2: "string", 3: "object", 4: "array",
-                 5: "binData", 8: "bool", 9: "date", 10: "null",
-                 16: "int", 18: "long", 19: "decimal"}
         t = F.call_function("typeof", col)
         checks = []
         null_check = None
         for a in aliases:
-            a = codes.get(a, a) if isinstance(a, int) else a
+            a = _BSON_CODES.get(a, a) if isinstance(a, int) else a
             if a == "null":
                 # BSON null (code 10): matches a null-VALUED field —
                 # r11; previously unexpressible (the isNotNull guard
@@ -1953,7 +2005,7 @@ def _match_op_col(col: Column, op: str, operand) -> Column:
 
 def _accumulator(name: str, acc: dict) -> Column:
     (op, operand), = acc.items()
-    _check_expr_keys(op, operand)   # $firstN/$topN/$percentile arg specs
+    _check_operand(op, operand)   # $firstN/$topN/$percentile arg specs
     if op == "$count":
         return F.count(F.lit(1)).alias(name)
     if op == "$sum":
@@ -1986,7 +2038,7 @@ def _accumulator(name: str, acc: dict) -> Column:
     if op in ("$top", "$bottom", "$topN", "$bottomN"):
         return _ranked_accumulator(name, op, operand)
     if op in ("$median", "$percentile"):
-        return _percentile_accumulator(name, op, operand)
+        return _percentile_pick(op, operand).alias(name)
     if op in ("$minN", "$maxN", "$firstN", "$lastN"):
         return _n_accumulator(op, operand).alias(name)
     if op == "$mergeObjects":
@@ -2058,20 +2110,17 @@ def _n_accumulator(op: str, operand: dict, over=None) -> Column:
     struct-wrap keeps NULL inputs (r11): the server INCLUDES null and
     missing values in $firstN/$lastN (unlike $minN/$maxN).
     """
-    n = int(operand["n"])
+    n = _int_lit(op, "n", operand["n"], least=1)
     if op in ("$minN", "$maxN"):
-        coll = F.collect_list(expr_to_col(operand["input"]))
+        arr = F.collect_list(expr_to_col(operand["input"]))
         if over is not None:
-            coll = coll.over(over)
-        return F.slice(F.sort_array(coll, asc=(op == "$minN")), 1, n)
+            arr = arr.over(over)
+        return _take_n(op, arr, n)
     wrapped = F.collect_list(
         F.struct(expr_to_col(operand["input"]).alias("v")))
     if over is not None:
         wrapped = wrapped.over(over)
-    arr = F.transform(wrapped, lambda s: s["v"])
-    if op == "$firstN":
-        return F.slice(arr, 1, n)
-    return F.reverse(F.slice(F.reverse(arr), 1, n))
+    return _take_n(op, F.transform(wrapped, lambda s: s["v"]), n)
 
 
 def _ranked_accumulator(name: str, op: str, operand: dict) -> Column:
@@ -2095,7 +2144,8 @@ def _ranked_pick(op: str, operand: dict, over=None) -> Column:
     collect when compiling the window form."""
     out_expr = expr_to_col(operand["output"])
     sort_by = operand["sortBy"]
-    n = operand.get("n", 1)
+    n = (_int_lit(op, "n", operand.get("n", 1), least=1)
+         if op in ("$topN", "$bottomN") else 1)
     keys = []
     for i, (fld, direction) in enumerate(sort_by.items()):
         c = expr_to_col(f"${fld}")
@@ -2126,7 +2176,7 @@ def _ranked_pick(op: str, operand: dict, over=None) -> Column:
     return F.transform(picked, lambda s: s["v"])
 
 
-def _percentile_accumulator(name: str, op: str, operand: dict) -> Column:
+def _percentile_pick(op: str, operand: dict, over=None) -> Column:
     """$median/$percentile (Mongo 7.0) with *discrete* (exact) semantics:
     the value at index ceil(p·n) of the sorted inputs (1-based), i.e. the
     smallest input with cumulative proportion ≥ p.  Mongo ships
@@ -2139,7 +2189,8 @@ def _percentile_accumulator(name: str, op: str, operand: dict) -> Column:
     (``_APPROX_PCTL`` set — see the module-level note) compiles to
     ``approx_percentile`` instead: a mergeable GK summary with bounded
     state, matching the server's own sketch trade and rank-exact while
-    ε·N < 1/2.
+    ε·N < 1/2.  Group and window forms (``over`` frames the aggregate)
+    share this core.
     """
     inp = expr_to_col(operand["input"])
     acc = _APPROX_PCTL.get()
@@ -2148,12 +2199,12 @@ def _percentile_accumulator(name: str, op: str, operand: dict) -> Column:
         if not isinstance(ps, list) or not ps:
             raise ValueError("$percentile: p must be a non-empty list")
     if acc is not None:
-        if op == "$median":
-            return F.percentile_approx(inp, 0.5, F.lit(acc)).alias(name)
-        return F.percentile_approx(
-            inp, F.array(*[F.lit(float(p)) for p in ps]),
-            F.lit(acc)).alias(name)
-    arr = F.array_sort(F.collect_list(inp))  # collect_list drops nulls
+        pct = (0.5 if op == "$median"
+               else F.array(*[F.lit(float(p)) for p in ps]))
+        out = F.percentile_approx(inp, pct, F.lit(acc))
+        return out if over is None else out.over(over)
+    coll = F.collect_list(inp)  # collect_list drops nulls
+    arr = F.array_sort(coll if over is None else coll.over(over))
     sz = F.size(arr)
 
     def pick(p: float) -> Column:
@@ -2161,8 +2212,8 @@ def _percentile_accumulator(name: str, op: str, operand: dict) -> Column:
         return F.element_at(arr, idx.cast("int"))
 
     if op == "$median":
-        return pick(0.5).alias(name)
-    return F.array(*[pick(p) for p in ps]).alias(name)
+        return pick(0.5)
+    return F.array(*[pick(p) for p in ps])
 
 
 # ---------------------------------------------------------------------------
@@ -2241,8 +2292,8 @@ def _project_expr(df: DataFrame, v) -> Column:
         # non-numeric scalars are ignored by $sum/$avg → 0 / null, but
         # $min/$max compare ANY scalar type and pass it through).  Only
         # the schema-resolvable top-level form is dispatched here;
-        # array-typed fields fall through to the per-row fold in
-        # ``_expr_op``, and NESTED occurrences (type unknown at compile
+        # array-typed fields fall through to the per-row fold of the
+        # ``_EXPR_OPS`` entry, and NESTED occurrences (type unknown at compile
         # time) still assume an array operand.
         agg_op, op_v = next(iter(v.items()))
         if isinstance(op_v, str) and op_v.startswith("$"):
@@ -2344,18 +2395,26 @@ def _stage_project(df: DataFrame, spec: dict) -> DataFrame:
     computed = {k: v for k, v in spec.items() if k not in plain}
     excludes = [k for k, v in plain.items() if not v]
     includes = [k for k, v in plain.items() if v]
+    if excludes == ["_id"] and (includes or computed):
+        # server rule (as in filters.project): `_id` is the one field an
+        # inclusion or computed projection may exclude — and inclusion
+        # output here carries only the named fields, so it just drops out
+        excludes = []
     if excludes and includes:
         raise ValueError("cannot mix include and exclude in $project")
     if excludes:
-        out = df.drop(*[c for c in excludes if c in df.columns
-                        and "." not in c])
+        # computed fields read the stage's INPUT, so stage them as hidden
+        # columns before any field is dropped or rewritten
+        tmp = {f"__pj_{i}": _project_expr(df, v)
+               for i, v in enumerate(computed.values())}
+        out = df.withColumns(tmp) if tmp else df
+        out = out.drop(*[c for c in excludes if c in df.columns
+                         and "." not in c])
         out = _drop_dotted(out, [c for c in excludes if "." in c])
-        for k, v in computed.items():
-            if "." in k:
-                out = _add_field_dotted(out, k, _project_expr(out, v))
-            else:
-                out = out.withColumn(k, _project_expr(out, v))
-        return out
+        for k, t in zip(computed, tmp):
+            out = (_add_field_dotted(out, k, F.col(t)) if "." in k
+                   else out.withColumn(k, F.col(t)))
+        return out.drop(*tmp)
     # inclusion / computed: dotted keys assemble nested documents —
     # {"s.x": 1, "s.z": expr} → one struct column s{x, z} (r12;
     # previously a FLAT column named "s.x").  Spec order is the output
@@ -2568,10 +2627,6 @@ def _stage_lookup(df: DataFrame, spec: dict,
         as_, F.coalesce(F.col(as_), F.array().cast(arr_type)))
 
 
-_CMP_OPS = {"$eq": "==", "$ne": "!=", "$lt": "<", "$lte": "<=",
-            "$gt": ">", "$gte": ">="}
-
-
 def _flatten_expr_and(expr) -> list:
     """$and-tree of an $expr → flat list of comparison docs."""
     if isinstance(expr, dict) and "$and" in expr:
@@ -2580,11 +2635,6 @@ def _flatten_expr_and(expr) -> list:
             out.extend(_flatten_expr_and(e))
         return out
     return [expr]
-
-
-def _apply_cmp(op: str, a: Column, b: Column) -> Column:
-    return {"$eq": a == b, "$ne": a != b, "$lt": a < b, "$lte": a <= b,
-            "$gt": a > b, "$gte": a >= b}[op]
 
 
 def _array_sort_comparator(sort_spec: dict):
@@ -2777,7 +2827,7 @@ def _stage_lookup_pipeline(df: DataFrame, spec: dict,
                     raise ValueError(f"$lookup pipeline $expr {op} needs "
                                      "a non-empty list")
                 return (op, [_parse_term(t) for t in operands])
-            if (op not in _CMP_OPS and op != "$in") \
+            if (op not in _CMP and op != "$in") \
                     or not isinstance(operands, list) \
                     or len(operands) != 2:
                 raise ValueError(
@@ -2859,7 +2909,7 @@ def _stage_lookup_pipeline(df: DataFrame, spec: dict,
                 needle = elem_ref(e, a)
                 return F.exists(elem_ref(e, b),
                                 lambda x: x.eqNullSafe(needle))
-            return _apply_cmp(op, elem_ref(e, a), elem_ref(e, b))
+            return _CMP[op](elem_ref(e, a), elem_ref(e, b))
 
         def keep(e):
             cond = None
@@ -3070,6 +3120,9 @@ def _stage_bucket_auto(df: DataFrame, spec: dict) -> DataFrame:
             F.max("__ba_v").alias("__ba_vmax"),
         )
         cuts = raw.select(
+            # no non-null value at all (e.g. empty input): no boundary
+            # to snap, so nothing can fall outside the range
+            F.col("__ba_vmin").isNull().alias("__ba_none"),
             F.expr(f"array_max(filter({ca}, c -> c <= __ba_vmin))")
             .alias("__ba_min"),
             F.expr(f"array_min(filter({ca}, c -> c > __ba_vmax))")
@@ -3082,10 +3135,12 @@ def _stage_bucket_auto(df: DataFrame, spec: dict) -> DataFrame:
             "__ba_min", "__ba_max",
             F.expr("filter(__ba_snapped, b -> b > __ba_min "
                    "AND b < __ba_max)").alias("__ba_cuts"),
+            "__ba_none",
         ).where(F.coalesce(
             F.assert_true(
-                F.col("__ba_min").isNotNull()
-                & F.col("__ba_max").isNotNull(),
+                F.col("__ba_none")
+                | (F.col("__ba_min").isNotNull()
+                   & F.col("__ba_max").isNotNull()),
                 F.lit("$bucketAuto granularity: a boundary fell outside "
                       "the preferred-number magnitude range (supported: "
                       "positive values, mantissa*10^[-10,12]; POWERSOF2 "
@@ -3325,7 +3380,7 @@ def _stage_set_window_fields(df: DataFrame, spec: dict) -> DataFrame:
             _check_spec_keys(f"$setWindowFields {op}", operand,
                              _WINDOW_DICT_KEYS[op])
         else:
-            _check_expr_keys(op, operand)
+            _check_operand(op, operand)
         if op == "$rank":
             col = F.rank().over(w_sorted)
         elif op == "$denseRank":
@@ -3400,10 +3455,7 @@ def _stage_set_window_fields(df: DataFrame, spec: dict) -> DataFrame:
             if ("N" in operand) == ("alpha" in operand):
                 raise ValueError("$expMovingAvg takes exactly one of N | alpha")
             if "N" in operand:
-                n_ = int(operand["N"])
-                if n_ < 1:
-                    raise ValueError("$expMovingAvg N must be >= 1")
-                alpha = 2.0 / (n_ + 1)
+                alpha = 2.0 / (_int_lit(op, "N", operand["N"], least=1) + 1)
             else:
                 alpha = float(operand["alpha"])
                 if not 0.0 < alpha < 1.0:
@@ -3456,33 +3508,9 @@ def _stage_set_window_fields(df: DataFrame, spec: dict) -> DataFrame:
                 # inside the frame (independent of the outer sortBy)
                 col = _ranked_pick(op, operand, over=w)
             elif op in ("$median", "$percentile"):
-                # window form (Mongo 7.0): same discrete-exact default /
-                # approx_percentile production trade as the group
-                # accumulator (_percentile_accumulator)
-                inp = expr_to_col(operand["input"])
-                if op == "$percentile":
-                    ps = operand["p"]
-                    if not isinstance(ps, list) or not ps:
-                        raise ValueError(
-                            "$percentile: p must be a non-empty list")
-                acc_n = _APPROX_PCTL.get()
-                if acc_n is not None:
-                    pct = (0.5 if op == "$median"
-                           else F.array(*[F.lit(float(p)) for p in ps]))
-                    col = F.percentile_approx(inp, pct,
-                                              F.lit(acc_n)).over(w)
-                else:
-                    arr = F.array_sort(F.collect_list(inp).over(w))
-                    sz = F.size(arr)
-
-                    def _pick(p: float):
-                        idx = F.greatest(
-                            F.ceil(sz.cast("double") * F.lit(float(p))),
-                            F.lit(1))
-                        return F.element_at(arr, idx.cast("int"))
-
-                    col = (_pick(0.5) if op == "$median"
-                           else F.array(*[_pick(p) for p in ps]))
+                # window form (Mongo 7.0): shares the group accumulator
+                # core, discrete-exact default / approx_percentile mode
+                col = _percentile_pick(op, operand, over=w)
             elif agg is None:
                 raise ValueError(f"unsupported window accumulator {op}")
             else:

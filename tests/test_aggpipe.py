@@ -114,6 +114,26 @@ def test_project_exclude_addfields_cond(people):
     assert rows(got.select("name")) == [("cy",)]
 
 
+def test_project_excludes_id_next_to_inclusions_and_computed(spark):
+    """`_id` is the one field an inclusion or computed $project may
+    exclude (the server rule filters.project follows), and computed
+    fields read the stage's input — including the excluded `_id`."""
+    df = spark.createDataFrame([((1, "a"), "x", 10)],
+                               "_id struct<g:long, h:string>, s string, n long")
+    got = aggregate(df, [{"$project": {"_id": 0, "s": 1}}])
+    assert got.columns == ["s"] and rows(got) == [("x",)]
+    got = aggregate(df, [{"$project": {"_id": 0, "g": "$_id.g"}}])
+    assert got.columns == ["g"] and rows(got) == [(1,)]
+    got = aggregate(df, [{"$project": {"_id": 0, "s": 1, "h": "$_id.h"}}])
+    assert got.columns == ["s", "h"] and rows(got) == [("x", "a")]
+    # exclusion projections still compute from the input, not from the
+    # pruned frame
+    got = aggregate(df, [{"$project": {"n": 0, "m": {"$add": ["$n", 1]}}}])
+    assert got.columns == ["_id", "s", "m"] and rows(got.select("m")) == [(11,)]
+    with pytest.raises(ValueError, match="cannot mix"):
+        aggregate(df, [{"$project": {"_id": 0, "n": 0, "s": 1}}])
+
+
 def test_skip_limit_count_replaceroot(spark, people):
     got = aggregate(people, [{"$sort": {"id": 1}}, {"$skip": 1}, {"$limit": 2},
                              {"$project": {"id": 1}}])
@@ -3301,6 +3321,22 @@ def test_bucket_auto_granularity(spark):
         bad.collect()
 
 
+def test_bucket_auto_granularity_empty_input(spark):
+    """Empty input yields no buckets (it used to raise the magnitude-range
+    error: with no values there is no boundary to snap)."""
+    empty = spark.createDataFrame([], "v double")
+    for pctl in (None, 1000):
+        got = aggregate(empty, [{"$bucketAuto": {
+            "groupBy": "$v", "buckets": 3, "granularity": "R5",
+            "output": {"n": {"$sum": 1}}}}], percentile_accuracy=pctl)
+        assert got.collect() == []
+    bad = aggregate(spark.createDataFrame([(0.0,)], "v double"), [
+        {"$bucketAuto": {"groupBy": "$v", "buckets": 2,
+                         "granularity": "R5"}}])
+    with pytest.raises(Exception, match="magnitude range"):
+        bad.collect()
+
+
 def test_unwind_nested_path(spark):
     df = spark.createDataFrame(
         [(1, {"name": "x", "inner": {"vals": [10, 20]}}),
@@ -4785,6 +4821,117 @@ def test_expr_timezone_utc_only(spark):
                 "date": "$ts", "unit": "day", "timezone": "UTC"}}}}])
     finally:
         spark.conf.set("spark.sql.session.timeZone", old_tz)
+
+
+from mongo_hadoop_spark.plans.aggpipe import _EXPR_OPS  # noqa: E402
+
+_KEYED_OPS = sorted(op for op, spec in _EXPR_OPS.items() if spec.keys)
+_UTC_ONLY_OPS = sorted(op for op, spec in _EXPR_OPS.items() if spec.utc_only)
+
+
+@pytest.mark.parametrize("op", _KEYED_OPS)
+def test_keyed_expr_operand_refuses_unknown_key(spark, op):
+    """Every operator with a dict-operand argument set in the table
+    refuses a key outside it, even next to all of its valid keys."""
+    df = spark.createDataFrame([(1,)], "k long")
+    operand = {k: "$k" for k in _EXPR_OPS[op].keys}
+    operand["notAnArgument"] = 1
+    with pytest.raises(ValueError,
+                       match=r"unknown argument\(s\) \['notAnArgument'\]"):
+        aggregate(df, [{"$project": {"y": {op: operand}}}])
+
+
+@pytest.mark.parametrize("op", _UTC_ONLY_OPS)
+def test_utc_only_expr_refuses_other_timezones(spark, op):
+    """Every UTC-only date operator refuses a non-UTC timezone, and an
+    explicit 'UTC' under a non-UTC session."""
+    df = spark.createDataFrame([(1,)], "k long")
+    for tz in ("America/New_York", "+05:30", "Asia/Tokyo"):
+        with pytest.raises(ValueError) as err:
+            aggregate(df, [{"$project": {"y": {op: {"timezone": tz}}}}])
+        assert f"timezone {tz!r} is unsupported" in str(err.value)
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        with pytest.raises(ValueError, match="session timezone"):
+            aggregate(df, [{"$project": {"y": {op: {"timezone": "UTC"}}}}])
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)
+
+
+_INT_ARG_CASES = [
+    ({"$firstN": {"input": "$xs", "n": "N"}}, "n"),
+    ({"$lastN": {"input": "$xs", "n": "N"}}, "n"),
+    ({"$minN": {"input": "$xs", "n": "N"}}, "n"),
+    ({"$maxN": {"input": "$xs", "n": "N"}}, "n"),
+    ({"$round": ["$v", "N"]}, "place"),
+    ({"$trunc": ["$v", "N"]}, "places"),
+    ({"$filter": {"input": "$xs", "cond": True, "limit": "N"}}, "limit"),
+    ({"$range": [0, 5, "N"]}, "step"),
+    ({"$slice": ["$xs", "N"]}, "count"),
+    ({"$slice": ["$xs", "N", 1]}, "position"),
+    ({"$indexOfArray": ["$xs", 1, "N"]}, "start"),
+    ({"$indexOfArray": ["$xs", 1, 0, "N"]}, "end"),
+    ({"$dateAdd": {"startDate": "$ts", "unit": "day", "amount": "N"}},
+     "amount"),
+    ({"$dateSubtract": {"startDate": "$ts", "unit": "day", "amount": "N"}},
+     "amount"),
+    ({"$dateTrunc": {"date": "$ts", "unit": "week", "binSize": "N"}},
+     "binSize"),
+]
+
+
+def _with_arg(expr, value):
+    if expr == "N":
+        return value
+    if isinstance(expr, dict):
+        return {k: _with_arg(v, value) for k, v in expr.items()}
+    if isinstance(expr, list):
+        return [_with_arg(v, value) for v in expr]
+    return expr
+
+
+@pytest.mark.parametrize("bad", [2.7, True, "$k"])
+@pytest.mark.parametrize("expr,arg", _INT_ARG_CASES,
+                         ids=[f"{next(iter(e))}-{a}" for e, a in _INT_ARG_CASES])
+def test_integer_literal_arguments(spark, expr, arg, bad):
+    """One integer-literal check for every operator argument Spark needs
+    as a constant: bools and non-integral floats refuse (``n: 2.7`` used
+    to become 2, ``n: true`` 1), as do expressions; integral floats read
+    as ints."""
+    import datetime as dt
+    df = spark.createDataFrame([(1, [3, 1, 2], 2.5, dt.datetime(2024, 3, 1))],
+                               "k long, xs array<int>, v double, ts timestamp")
+    with pytest.raises(ValueError, match=f"{arg} must be an integer literal"):
+        aggregate(df, [{"$project": {"y": _with_arg(expr, bad)}}])
+    ok = aggregate(df, [{"$project": {"y": _with_arg(expr, 1.0)}}])
+    assert ok.collect() == aggregate(
+        df, [{"$project": {"y": _with_arg(expr, 1)}}]).collect()
+
+
+@pytest.mark.parametrize("bad", [2.7, True])
+def test_integer_literal_accumulator_and_window_n(spark, bad):
+    """The group and window forms of $firstN/$lastN/$minN/$maxN and
+    $topN/$bottomN share the integer-literal check."""
+    df = spark.createDataFrame([(1, 5), (1, 7), (2, 6)], "g long, k long")
+    for op in ("$firstN", "$lastN", "$minN", "$maxN"):
+        acc = {op: {"input": "$k", "n": bad}}
+        with pytest.raises(ValueError, match="n must be an integer literal"):
+            aggregate(df, [{"$group": {"_id": "$g", "v": acc}}])
+        with pytest.raises(ValueError, match="n must be an integer literal"):
+            aggregate(df, [{"$setWindowFields": {
+                "sortBy": {"k": 1}, "output": {"v": acc}}}])
+    for op in ("$topN", "$bottomN"):
+        acc = {op: {"sortBy": {"k": 1}, "output": "$k", "n": bad}}
+        with pytest.raises(ValueError, match="n must be an integer literal"):
+            aggregate(df, [{"$group": {"_id": "$g", "v": acc}}])
+    with pytest.raises(ValueError, match="N must be an integer literal"):
+        aggregate(df, [{"$setWindowFields": {"sortBy": {"k": 1}, "output": {
+            "v": {"$expMovingAvg": {"input": "$k", "N": bad}}}}}])
+    got = aggregate(df, [
+        {"$group": {"_id": "$g", "v": {"$minN": {"input": "$k", "n": 2.0}}}},
+        {"$sort": {"_id": 1}}]).collect()
+    assert [r.v for r in got] == [[5, 7], [6]]
 
 
 def test_date_to_string_on_null(spark):
