@@ -257,22 +257,20 @@ def decode_file_iter(fobj: io.BufferedIOBase, start: int = 0, length: int | None
 # ---------------------------------------------------------------------------
 
 _CODEC_OPENERS = {".gz": gzip.open, ".bz2": bz2.open}
+CODEC_SUFFIXES = {"gzip": ".gz", "bz2": ".bz2"}
 
 
 def compression_codec(path: str) -> str | None:
     """'gzip' / 'bz2' for codec-suffixed paths, else None."""
     ext = os.path.splitext(path)[1]
-    if ext == ".gz":
-        return "gzip"
-    if ext == ".bz2":
-        return "bz2"
-    return None
+    return next((c for c, s in CODEC_SUFFIXES.items() if s == ext), None)
 
 
-def open_bson(path: str, mode: str = "rb"):
+def open_bson(path: str, mode: str = "rb", codec_of: str | None = None):
     """Open a .bson file for binary read/write, transparently decompressing
-    / compressing by extension (.bson.gz → gzip, .bson.bz2 → bz2)."""
-    opener = _CODEC_OPENERS.get(os.path.splitext(path)[1], open)
+    / compressing by extension (.bson.gz → gzip, .bson.bz2 → bz2) — the
+    extension of ``codec_of`` when given (a temp file for that path)."""
+    opener = _CODEC_OPENERS.get(os.path.splitext(codec_of or path)[1], open)
     return opener(path, mode)
 
 

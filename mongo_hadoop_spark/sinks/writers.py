@@ -11,10 +11,13 @@ Reference semantics reproduced (SURVEY §2.10):
   MongoUpdateWritable 5-tuple (core/.../io/MongoUpdateWritable.java:43-47).
 - W7/W10 — ensure-index on store (pig/.../MongoStorage.java:237-238).
 
-Execution model: ``write_documents``/``write_updates`` run
-``foreachPartition`` so every Spark task writes its own committed journal
-segment in parallel (temp file + atomic rename — speculative duplicates
-never commit); mutations are then replayed against the collection by
+Execution model: ``write_documents`` runs ``foreachPartition`` so every
+Spark task writes its own segment in parallel (documents for insert,
+mutations for the update modes).  Each task publishes its segment when it
+ends, so a retried or speculative task publishes its rows again: both
+paths are at-least-once.  The exactly-once file-store path is the
+``mongodoc`` sink, whose job commit publishes one segment per partition.
+Journaled mutations are then replayed against the collection by
 ``apply_pending_updates`` (the committer step).  On a live MongoDB this
 replay would be pymongo ``bulk_write`` per batch; the file store applies
 them in one merge pass.

@@ -15,6 +15,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from mongo_hadoop_spark.store import DocumentCollection
+
 
 def read_bson(
     spark: SparkSession,
@@ -33,10 +35,7 @@ def read_bson(
     import tempfile
 
     if os.path.isdir(path):
-        files = sorted(
-            f for pat in ("*.bson", "*.bson.gz", "*.bson.bz2")
-            for f in glob.glob(os.path.join(path, pat))
-        )
+        files = DocumentCollection(path).segments()
     else:
         files = sorted(glob.glob(path)) if any(c in path for c in "*?[") else [path]
     files = [f for f in files if os.path.isfile(f)]
@@ -66,10 +65,18 @@ def read_bson(
 
 def write_bson(df: DataFrame, path: str, mode: str = "error") -> None:
     """Write a DataFrame as .bson segments under ``path`` (a directory);
-    the segments concatenate into a valid mongorestore dump."""
+    the segments concatenate into a valid mongorestore dump.  ``mode`` is
+    ``error`` (refuse a directory that already holds segments),
+    ``append`` or ``overwrite``."""
+    if mode not in ("error", "append", "overwrite"):
+        raise ValueError(f"write_bson mode must be error, append or "
+                         f"overwrite, got {mode!r}")
+    if mode == "error" and DocumentCollection(path).segments():
+        raise FileExistsError(f"{path!r} already holds .bson segments; "
+                              "use mode='append' or 'overwrite'")
     parent, name = os.path.split(path.rstrip("/"))
     (df.write.format("mongodoc")
        .option("path", parent or ".")
        .option("collection", name)
-       .mode("append" if mode == "append" else ("overwrite" if mode == "overwrite" else "append"))
+       .mode("overwrite" if mode == "overwrite" else "append")
        .save())

@@ -26,15 +26,16 @@ Write path:
     df.write.format("mongodoc").option("path", store_dir)
       .option("collection", name).mode("append").save()
 
-Each task spools rows to a temp ``.bson`` segment; global commit renames
-all segments into the collection (task retries/speculation leave only
-uncommitted temp files — the reference's idempotence story, W1/W2).
+Each task stages its rows as one segment; the job commit publishes every
+staged segment (and, on overwrite, then retires the segments that were
+there before).  Failed task attempts and speculative duplicates are never
+published — the reference's idempotence story, W1/W2.  The segment format
+and its commit steps live in ``store.py``.
 """
 
 from __future__ import annotations
 
 import os
-import uuid
 from dataclasses import dataclass
 
 from pyspark.sql.datasource import (
@@ -43,14 +44,19 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from mongo_hadoop_spark.plans.filters import and_queries, match, translate_filters
+from mongo_hadoop_spark import bsonio
+from mongo_hadoop_spark.plans.filters import and_queries, translate_filters
 from mongo_hadoop_spark.plans.splitters import (
     DEFAULT_MIN_DOCS, DEFAULT_SPLIT_SIZE, SplitSpec, bson_file_splitter,
     multi_collection_splits, paginating_splitter, sample_splitter,
     single_splitter,
 )
+from mongo_hadoop_spark.sinks.writers import row_to_doc
 from mongo_hadoop_spark.sources import extjson
 from mongo_hadoop_spark.sources.schema_infer import doc_to_row, infer_schema
+from mongo_hadoop_spark.store import (
+    DocumentCollection, DocumentStore, StagedSegment, cursor, segment_docs,
+)
 
 
 @dataclass
@@ -64,8 +70,6 @@ class DocumentDataSource(DataSource):
         return "mongodoc"
 
     def _store(self):
-        from mongo_hadoop_spark.store import DocumentStore
-
         path = self.options.get("path")
         if not path:
             raise ValueError("option 'path' (store directory) is required")
@@ -230,8 +234,6 @@ class DocumentReader(DataSourceReader):
         ]
 
     def partitions(self):
-        from mongo_hadoop_spark.store import DocumentStore
-
         store = DocumentStore(self.options["path"])
         colls = [c.strip() for c in self.options["collection"].split(",")]
         strategy = self.options.get("splitter", "bson_file")
@@ -264,7 +266,6 @@ class DocumentReader(DataSourceReader):
                                              min_docs=min_docs, query=query)
             else:  # bson_file: byte-range splits per segment (P10/P11)
                 import fnmatch
-                import os as _os
 
                 # F10: glob filter on which segment files are scanned
                 # (BSONPathFilter analog, core/.../BSONFileInputFormat.java:86-90)
@@ -272,7 +273,7 @@ class DocumentReader(DataSourceReader):
                 segs = [
                     seg for seg in coll.segments()
                     if not path_filter
-                    or fnmatch.fnmatch(_os.path.basename(seg), path_filter)
+                    or fnmatch.fnmatch(os.path.basename(seg), path_filter)
                 ]
                 splits = []
                 for seg in segs:
@@ -286,46 +287,17 @@ class DocumentReader(DataSourceReader):
     # --- per-partition scan (MongoRecordReader analog) --------------------
 
     def read(self, partition: _DocPartition):
-        from mongo_hadoop_spark import bsonio
-        from mongo_hadoop_spark.store import DocumentStore
-
-        from mongo_hadoop_spark.plans.filters import project as mongo_project
-
         if partition is None:  # planner produced zero partitions
             return
         spec = partition.spec
-        convert = self._converter()
-        plain = not (spec.sort or spec.limit is not None or spec.skip)
-
-        if spec.segment_path is not None and plain:
-            # streaming fast path: no cursor options → decode-filter-emit
-            with bsonio.open_bson(spec.segment_path) as f:
-                for doc in bsonio.decode_file_iter(
-                    f, start=spec.byte_start, length=spec.byte_length
-                ):
-                    if match(doc, spec.query):
-                        if spec.projection:
-                            doc = mongo_project(doc, spec.projection)
-                        yield convert(doc)
-            return
-
         if spec.segment_path is not None:
-            with bsonio.open_bson(spec.segment_path) as f:
-                docs = [
-                    d for d in bsonio.decode_file_iter(
-                        f, start=spec.byte_start, length=spec.byte_length)
-                    if match(d, spec.query)
-                ]
-            docs = _apply_cursor_options(docs, spec)
-            for doc in docs:
-                yield convert(doc)
+            docs = segment_docs(spec.segment_path, spec.query,
+                                spec.byte_start, spec.byte_length)
         else:
-            store = DocumentStore(self.options["path"])
-            coll = store.collection(spec.collection)
-            for doc in coll.find(spec.query, projection=spec.projection,
-                                 sort=spec.sort, skip=spec.skip,
-                                 limit=spec.limit):
-                yield convert(doc)
+            docs = DocumentStore(self.options["path"]).collection(
+                spec.collection)._scan(spec.query)
+        yield from map(self._converter(), cursor(
+            docs, spec.projection, spec.sort, spec.skip, spec.limit))
 
     def _converter(self):
         """doc → row tuple, honoring schemaless mode and columns mapping."""
@@ -441,8 +413,6 @@ class LiveDocumentReader(DocumentReader):
                 f"{ns} by ns or by config.collections uuid — collection "
                 f"not sharded, or the URI database/collection is wrong")
 
-        from mongo_hadoop_spark import bsonio
-
         def bound(v):
             if isinstance(v, dict):
                 if key not in v:
@@ -532,14 +502,10 @@ class DocumentStreamReader(DataSourceStreamReader):
         self.collection = colls[0]
 
     def _segment_names(self) -> list[str]:
-        import os as _os
-
-        from mongo_hadoop_spark.store import DocumentStore
-
         coll = DocumentStore(self.options["path"]).collection(self.collection)
         if not coll.exists():
             return []
-        return sorted(_os.path.basename(s) for s in coll.segments())
+        return sorted(os.path.basename(s) for s in coll.segments())
 
     def initialOffset(self) -> dict:  # noqa: N802 (Spark API name)
         if self.options.get("startingOffsets") == "latest":
@@ -550,14 +516,12 @@ class DocumentStreamReader(DataSourceStreamReader):
         return {"seen": self._segment_names()}
 
     def partitions(self, start: dict, end: dict):
-        import os as _os
-
         new = sorted(set(end["seen"]) - set(start["seen"]))
-        coll_dir = _os.path.join(self.options["path"], self.collection)
+        coll_dir = os.path.join(self.options["path"], self.collection)
         specs = [
             SplitSpec(collection=self.collection,
                       query=self._delegate.static_query,
-                      segment_path=_os.path.join(coll_dir, name))
+                      segment_path=os.path.join(coll_dir, name))
             for name in new
         ]
         return self._delegate._with_cursor_options(specs)
@@ -573,75 +537,49 @@ class DocumentStreamReader(DataSourceStreamReader):
 
 
 @dataclass
-class _SegmentCommit(WriterCommitMessage):
-    tmp_path: str
-    final_path: str
-    rows: int
+class _Staged(WriterCommitMessage):
+    segment: StagedSegment
 
 
 class DocumentWriter(DataSourceWriter):
     """Insert-mode writer with the reference's commit protocol (W1/W2):
-    task → temp segment; job commit → atomic renames; abort → delete."""
+    task → staged segment; job commit → publish (then, on overwrite,
+    retire the segments that were there before); abort → discard."""
 
     def __init__(self, options, schema: StructType, overwrite: bool):
         self.options = options
-        self.schema_ = schema
         self.overwrite = overwrite
-        self.coll_dir = os.path.join(options["path"], options["collection"])
-
-    def write(self, rows) -> _SegmentCommit:
-        from mongo_hadoop_spark import bsonio
-
-        os.makedirs(self.coll_dir, exist_ok=True)
+        self.coll = DocumentCollection(
+            os.path.join(options["path"], options["collection"]))
         # optional codec (gzip/bz2): compressed segments are unsplittable
         # downstream (one task each) — the write-side of the codec rule
-        codec = str(self.options.get("compression", "")).lower()
-        ext = {"": "", "none": "", "gzip": ".gz", "bz2": ".bz2"}.get(codec)
-        if ext is None:
+        codec = str(options.get("compression", "")).lower()
+        self.codec = None if codec in ("", "none") else codec
+        if self.codec is not None and self.codec not in bsonio.CODEC_SUFFIXES:
             raise ValueError(f"unsupported compression {codec!r}")
-        name = uuid.uuid4().hex[:12]
-        tmp = os.path.join(self.coll_dir, f"_tmp_{name}.bson{ext}.inprogress")
-        final = os.path.join(self.coll_dir, f"{name}.bson{ext}")
-        fields = [f.name for f in self.schema_.fields]
-        n = 0
-        opener = bsonio._CODEC_OPENERS.get(ext, open)
-        with opener(tmp, "wb") as f:
-            for row in rows:
-                doc = _row_to_doc(row, fields)
-                f.write(bsonio.encode(doc))
-                n += 1
-        return _SegmentCommit(tmp, final, n)
+
+    def write(self, rows) -> _Staged:
+        return _Staged(self.coll.stage(map(row_to_doc, rows),
+                                       codec=self.codec))
 
     def commit(self, messages) -> None:
-        from mongo_hadoop_spark import bsonio
-        from mongo_hadoop_spark.plans.splitters import DEFAULT_SPLIT_SIZE
-
-        if self.overwrite:
-            import glob
-            for pat in ("*.bson", "*.bson.gz", "*.bson.bz2"):
-                for seg in glob.glob(os.path.join(self.coll_dir, pat)):
-                    os.remove(seg)
-                    sc = bsonio.sidecar_path(seg)
-                    if os.path.exists(sc):
-                        os.remove(sc)
-        write_sidecar = (
-            str(self.options.get("write_sidecar", "false")).lower() == "true"
-        )
-        split_size = int(self.options.get("split_size", DEFAULT_SPLIT_SIZE))
-        for m in messages:
-            if m is not None and os.path.exists(m.tmp_path):
-                os.rename(m.tmp_path, m.final_path)
-                if write_sidecar and not bsonio.compression_codec(m.final_path):
-                    # W4: persist the doc-boundary splits beside the segment
-                    # (BSONFileRecordWriter's .splits sidecar) so later
-                    # readers skip the length-header walk
-                    splits = bsonio.find_split_points(m.final_path, split_size)
-                    bsonio.write_splits_sidecar(m.final_path, splits)
+        old = self.coll.segments() if self.overwrite else []
+        staged = [m.segment for m in messages if m is not None]
+        self.coll.commit(staged, retire=old)
+        if str(self.options.get("write_sidecar", "false")).lower() == "true":
+            # W4: persist the doc-boundary splits beside each segment
+            # (BSONFileRecordWriter's .splits sidecar) so later readers
+            # skip the length-header walk
+            split_size = int(self.options.get("split_size", DEFAULT_SPLIT_SIZE))
+            for s in staged:
+                if not bsonio.compression_codec(s.path):
+                    bsonio.write_splits_sidecar(
+                        s.path, bsonio.find_split_points(s.path, split_size))
 
     def abort(self, messages) -> None:
         for m in messages or []:
-            if m is not None and os.path.exists(m.tmp_path):
-                os.remove(m.tmp_path)
+            if m is not None:
+                self.coll.discard(m.segment)
 
 
 @dataclass
@@ -667,7 +605,6 @@ class LiveDocumentWriter(DataSourceWriter):
 
     def __init__(self, options, schema: StructType):
         self.options = options
-        self.schema_ = schema
         self.batch_size = int(options.get("batch_size", 1000))
 
     def write(self, rows) -> _LiveCommit:
@@ -675,11 +612,10 @@ class LiveDocumentWriter(DataSourceWriter):
 
         coll = collection_from_uri(self.options["uri"],
                                    self.options.get("client_factory"))
-        fields = [f.name for f in self.schema_.fields]
         batch: list = []
         n = batches = 0
         for row in rows:
-            batch.append(_row_to_doc(row, fields))
+            batch.append(row_to_doc(row))
             if len(batch) >= self.batch_size:
                 coll.insert_many(batch, ordered=True)
                 n += len(batch)
@@ -696,49 +632,3 @@ class LiveDocumentWriter(DataSourceWriter):
 
     def abort(self, messages) -> None:
         pass  # at-least-once: no server-side undo exists
-
-
-def _apply_cursor_options(docs: list, spec) -> list:
-    """sort → skip → limit → project, in the reference's cursor order."""
-    from mongo_hadoop_spark.plans.filters import bson_compare, project
-    from mongo_hadoop_spark.plans.paths import get_path
-
-    if spec.sort:
-        import functools
-        for key, direction in reversed(list(spec.sort)):
-            docs = sorted(
-                docs,
-                key=functools.cmp_to_key(
-                    lambda a, b, k=key: bson_compare(get_path(a, k), get_path(b, k))
-                ),
-                reverse=direction < 0,
-            )
-    if spec.skip:
-        docs = docs[spec.skip:]
-    if spec.limit is not None:
-        docs = docs[: spec.limit]
-    if spec.projection:
-        docs = [project(d, spec.projection) for d in docs]
-    return docs
-
-
-def _row_to_doc(row, fields) -> dict:
-    out = {}
-    for name in fields:
-        v = row[name] if not hasattr(row, "asDict") else row.asDict(recursive=True).get(name)
-        out[name] = _to_bson_value(v)
-    return out
-
-
-def _to_bson_value(v):
-    import datetime as _dt
-
-    if hasattr(v, "asDict"):
-        return {k: _to_bson_value(x) for k, x in v.asDict().items()}
-    if isinstance(v, dict):
-        return {k: _to_bson_value(x) for k, x in v.items()}
-    if isinstance(v, (list, tuple)):
-        return [_to_bson_value(x) for x in v]
-    if isinstance(v, _dt.date) and not isinstance(v, _dt.datetime):
-        return _dt.datetime(v.year, v.month, v.day, tzinfo=_dt.timezone.utc)
-    return v

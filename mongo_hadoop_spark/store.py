@@ -2,11 +2,21 @@
 deployment (no server/driver exists in this environment).
 
 Layout: a *store* is a directory; a *collection* is a subdirectory of
-``*.bson`` segment files (mongorestore-compatible, SURVEY §2.10 W4).
-Writers emit one segment per Spark task through a temp-file + atomic
-rename commit protocol — the analog of MongoRecordWriter's temp-file
-spool + MongoOutputCommitter's commit-time replay
-(core/.../output/MongoRecordWriter.java:41-130,
+``*.bson`` segment files (mongorestore-compatible, SURVEY §2.10 W4), each
+with a ``.meta.json`` count/zone-map sidecar and optionally a ``.splits``
+sidecar.  This module owns that format.  Every writer goes through the
+three steps of :class:`DocumentCollection`:
+
+- :meth:`~DocumentCollection.stage` writes documents to a temp segment
+  plus its meta, invisible to readers;
+- :meth:`~DocumentCollection.publish` renames the meta, then the segment,
+  to their final names (the commit);
+- :meth:`~DocumentCollection.retire` removes a segment and both sidecars.
+
+Replacing writers (``rewrite``, ``compact``, ``mongodoc`` overwrite)
+publish their new segments before they retire the old ones — the analog
+of MongoRecordWriter's temp-file spool + MongoOutputCommitter's
+commit-time replay (core/.../output/MongoRecordWriter.java:41-130,
 core/.../output/MongoOutputCommitter.java:91-186).
 
 A GridFS analog stores large binaries as chunk documents
@@ -20,9 +30,13 @@ on pymongo bulk ops — the import is gated so this module works without it.
 from __future__ import annotations
 
 import glob
+import itertools
+import json
 import os
 import random
+import shutil
 import uuid
+from dataclasses import dataclass
 
 from mongo_hadoop_spark import bsonio
 from mongo_hadoop_spark.plans import filters as qf
@@ -30,21 +44,20 @@ from mongo_hadoop_spark.plans.paths import get_path
 
 DEFAULT_CHUNK_SIZE = 255 * 1024  # GridFS default chunk size
 META_SUFFIX = ".meta.json"
+_SEGMENT_GLOBS = ("*.bson", "*.bson.gz", "*.bson.bz2")
 
 
-def _write_segment_meta(seg_path: str, count: int,
-                        bounds: dict | None = None) -> None:
-    import json
+def _staging(path: str) -> str:
+    """The temp name a file is written under until it is published."""
+    d, name = os.path.split(path)
+    return os.path.join(d, f"_tmp_{name}.inprogress")
 
-    meta = {"count": count, "bytes": os.path.getsize(seg_path)}
-    if bounds:
-        clean = {k: b for k, b in bounds.items() if b is not None}
-        if clean:
-            meta["bounds"] = clean
-    tmp = seg_path + META_SUFFIX + ".inprogress"
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.rename(tmp, seg_path + META_SUFFIX)
+
+@dataclass(frozen=True)
+class StagedSegment:
+    """A segment written under temp names, not yet visible to readers."""
+    path: str   # the name publish() gives it
+    count: int
 
 
 # Zone-map bounds (parquet row-group stats analog): per segment, for each
@@ -88,12 +101,6 @@ def _track_bounds(bounds: dict, doc: dict) -> None:
 
 
 _MISSING = object()
-
-
-def _tracked(docs, bounds: dict):
-    for d in docs:
-        _track_bounds(bounds, d)
-        yield d
 
 
 def segment_may_match(bounds: dict | None, query: dict | None) -> bool:
@@ -148,8 +155,6 @@ def segment_may_match(bounds: dict | None, query: dict | None) -> bool:
 
 
 def _read_segment_meta(seg_path: str) -> dict | None:
-    import json
-
     p = seg_path + META_SUFFIX
     if not os.path.exists(p):
         return None  # pre-stats segment (or foreign .bson file): caller scans
@@ -158,6 +163,33 @@ def _read_segment_meta(seg_path: str) -> dict | None:
             return json.load(f)
     except (OSError, ValueError):
         return None
+
+
+def segment_docs(seg: str, query: dict | None = None, start: int = 0,
+                 length: int | None = None):
+    """The documents of one segment (or of a byte range of it, cut at
+    document boundaries by the splitter) that match ``query``."""
+    with bsonio.open_bson(seg) as f:
+        for doc in bsonio.decode_file_iter(f, start=start, length=length):
+            if qf.match(doc, query):
+                yield doc
+
+
+def cursor(docs, projection: dict | None = None, sort=None, skip: int = 0,
+           limit: int | None = None):
+    """sort → skip → limit → project over already-filtered documents, in
+    MongoInputSplit.getCursor's option order
+    (core/.../input/MongoInputSplit.java:272-299)."""
+    if sort:
+        docs = list(docs)
+        for key, direction in reversed(list(sort)):
+            docs.sort(key=_SortKey.factory(key), reverse=direction < 0)
+    if skip or limit is not None:
+        docs = itertools.islice(docs, skip,
+                                None if limit is None else skip + limit)
+    if projection:
+        docs = (qf.project(d, projection) for d in docs)
+    return docs
 
 
 class DocumentCollection:
@@ -171,10 +203,8 @@ class DocumentCollection:
         return os.path.basename(self.path.rstrip("/"))
 
     def segments(self) -> list[str]:
-        return sorted(
-            f for pat in ("*.bson", "*.bson.gz", "*.bson.bz2")
-            for f in glob.glob(os.path.join(self.path, pat))
-        )
+        return sorted(f for pat in _SEGMENT_GLOBS
+                      for f in glob.glob(os.path.join(self.path, pat)))
 
     def exists(self) -> bool:
         return os.path.isdir(self.path)
@@ -183,27 +213,8 @@ class DocumentCollection:
 
     def find(self, query: dict | None = None, projection: dict | None = None,
              sort=None, skip: int = 0, limit: int | None = None):
-        """Cursor-style scan: filter → sort → skip → limit → project.
-        Mirrors MongoInputSplit.getCursor option application order
-        (core/.../input/MongoInputSplit.java:272-299)."""
-        docs = self._scan(query)
-        if sort:
-            for key, direction in reversed(list(sort)):
-                docs = sorted(
-                    docs,
-                    key=_SortKey.factory(key),
-                    reverse=direction < 0,
-                )
-        out = []
-        n_skipped = 0
-        for d in docs:
-            if n_skipped < skip:
-                n_skipped += 1
-                continue
-            out.append(qf.project(d, projection))
-            if limit is not None and len(out) >= limit:
-                break
-        return out
+        """Cursor-style scan: filter → sort → skip → limit → project."""
+        return list(cursor(self._scan(query), projection, sort, skip, limit))
 
     def _scan(self, query: dict | None = None):
         for seg in self.segments():
@@ -211,10 +222,7 @@ class DocumentCollection:
                 meta = _read_segment_meta(seg)
                 if meta and not segment_may_match(meta.get("bounds"), query):
                     continue  # zone-map pruned: provably no match inside
-            with bsonio.open_bson(seg) as f:
-                for doc in bsonio.decode_file_iter(f):
-                    if qf.match(doc, query):
-                        yield doc
+            yield from segment_docs(seg, query)
 
     def _segment_count(self, seg: str) -> int:
         """Doc count of one segment: sidecar stats if present (O(1)), else a
@@ -224,8 +232,7 @@ class DocumentCollection:
         meta = _read_segment_meta(seg)
         if meta is not None and "count" in meta:
             return int(meta["count"])
-        with bsonio.open_bson(seg) as f:
-            return sum(1 for _ in bsonio.decode_file_iter(f))
+        return sum(1 for _ in segment_docs(seg))
 
     def count(self, query: dict | None = None, limit: int | None = None) -> int:
         if not query:  # unfiltered count: sum per-segment sidecar stats
@@ -268,41 +275,81 @@ class DocumentCollection:
                     reservoir[j] = v
         return reservoir
 
-    # --- write side --------------------------------------------------------
+    # --- write protocol: stage → publish → retire --------------------------
+
+    def stage(self, docs, name: str | None = None, codec: str | None = None,
+              max_bytes: int | None = None) -> StagedSegment:
+        """Write ``docs`` to a temp segment plus its ``.meta.json`` (count,
+        bytes, zone-map bounds).  ``codec`` ('gzip'/'bz2') compresses the
+        segment.  With ``max_bytes`` the segment ends at the first document
+        that brings it to that size, leaving the rest of an iterator
+        ``docs`` unread."""
+        os.makedirs(self.path, exist_ok=True)
+        ext = bsonio.CODEC_SUFFIXES[codec] if codec else ""
+        path = os.path.join(self.path,
+                            f"{name or uuid.uuid4().hex[:12]}.bson{ext}")
+        tmp = _staging(path)
+        bounds: dict = {}
+        n = size = 0
+        with bsonio.open_bson(tmp, "wb", codec_of=path) as f:
+            for doc in docs:
+                data = bsonio.encode(doc)
+                f.write(data)
+                _track_bounds(bounds, doc)
+                n += 1
+                size += len(data)
+                if max_bytes is not None and size >= max_bytes:
+                    break
+        meta = {"count": n, "bytes": os.path.getsize(tmp)}
+        clean = {k: b for k, b in bounds.items() if b is not None}
+        if clean:
+            meta["bounds"] = clean
+        with open(_staging(path + META_SUFFIX), "w") as f:
+            json.dump(meta, f)
+        return StagedSegment(path, n)
+
+    def publish(self, staged: StagedSegment) -> str:
+        """Commit a staged segment: meta first, so a visible segment always
+        has its stats.  Returns the segment's path."""
+        for final in (staged.path + META_SUFFIX, staged.path):
+            os.rename(_staging(final), final)
+        return staged.path
+
+    def discard(self, staged: StagedSegment) -> None:
+        """Remove the temp files of a segment that will not be published."""
+        for final in (staged.path, staged.path + META_SUFFIX):
+            if os.path.exists(_staging(final)):
+                os.remove(_staging(final))
+
+    def retire(self, seg: str) -> None:
+        """Remove a committed segment and both of its sidecars."""
+        for p in (seg, seg + META_SUFFIX, bsonio.sidecar_path(seg)):
+            if os.path.exists(p):
+                os.remove(p)
+
+    def commit(self, staged: list[StagedSegment], retire=()) -> None:
+        """Publish ``staged``, then retire the ``retire`` segments.  A crash
+        before the last publish leaves the old contents readable; one after
+        it leaves the new contents, beside old ones until the retires end."""
+        for s in staged:
+            self.publish(s)
+        for seg in retire:
+            self.retire(seg)
 
     def insert_many(self, docs, segment_hint: str | None = None) -> int:
-        """Bulk insert as one committed segment (temp file + rename).
-        A ``.meta.json`` stats sidecar (count/bytes) is committed alongside
-        so later collstats/count calls are metadata-only."""
-        os.makedirs(self.path, exist_ok=True)
-        name = segment_hint or uuid.uuid4().hex[:12]
-        tmp = os.path.join(self.path, f"_tmp_{name}.bson.inprogress")
-        final = os.path.join(self.path, f"{name}.bson")
-        bounds: dict = {}
-        n = bsonio.write_bson_file(tmp, _tracked(docs, bounds))
-        _write_segment_meta(tmp, n, bounds)
-        os.rename(tmp + META_SUFFIX, final + META_SUFFIX)
-        os.rename(tmp, final)  # commit
-        return n
+        """Bulk insert as one committed segment (stage + publish)."""
+        staged = self.stage(docs, name=segment_hint)
+        self.publish(staged)
+        return staged.count
 
     def rewrite(self, docs) -> int:
-        """Replace collection contents atomically-ish (compaction/merge)."""
-        os.makedirs(self.path, exist_ok=True)
-        tmp = os.path.join(self.path, "_tmp_rewrite.bson.inprogress")
-        bounds: dict = {}
-        n = bsonio.write_bson_file(tmp, _tracked(docs, bounds))
-        _write_segment_meta(tmp, n, bounds)
-        for seg in self.segments():
-            os.remove(seg)
-            if os.path.exists(seg + META_SUFFIX):
-                os.remove(seg + META_SUFFIX)
-            sc = bsonio.sidecar_path(seg)
-            if os.path.exists(sc):
-                os.remove(sc)
-        final = os.path.join(self.path, "seg-000000.bson")
-        os.rename(tmp + META_SUFFIX, final + META_SUFFIX)
-        os.rename(tmp, final)
-        return n
+        """Replace the collection's contents with ``docs``: the new segment
+        is published before the old ones are retired (see :meth:`commit`),
+        so a failed rewrite never loses the old documents."""
+        old = self.segments()
+        staged = self.stage(docs)
+        self.commit([staged], retire=old)
+        return staged.count
 
     def compact(self, target_bytes: int = 8 * 1024 * 1024) -> dict:
         """Merge committed segments into ~``target_bytes`` packed segments.
@@ -315,71 +362,20 @@ class DocumentCollection:
         rebuilt per packed segment, so count/stats stay metadata-only
         and pruning keeps working.
 
-        Crash semantics match :meth:`rewrite`: new segments commit
-        (rename) before old ones are removed, so a crash in the cleanup
-        window leaves transiently duplicated documents; re-running
-        ``compact`` converges.  Single-writer assumption, like the rest
-        of the file store.
+        Crash semantics are :meth:`commit`'s.  Single-writer assumption,
+        like the rest of the file store.
         """
-        from mongo_hadoop_spark import bsonio as _b
-
         old = self.segments()
         if len(old) <= 1:
             return {"before": len(old), "after": len(old), "rewritten": 0}
-
-        new_tmp: list[tuple[str, str]] = []  # (tmp_path, final_path)
-        fh = None
-        size = 0
-        n_docs = 0
-        bounds: dict = {}
-
-        def _open():
-            nonlocal fh, size, n_docs, bounds
-            name = uuid.uuid4().hex[:12]
-            tmp = os.path.join(self.path, f"_tmp_{name}.bson.inprogress")
-            final = os.path.join(self.path, f"{name}.bson")
-            new_tmp.append((tmp, final))
-            fh = open(tmp, "wb")
-            size = 0
-            n_docs = 0
-            bounds = {}
-
-        def _close():
-            nonlocal fh
-            if fh is None:
-                return
-            fh.close()
-            tmp = new_tmp[-1][0]
-            _write_segment_meta(tmp, n_docs, bounds)
-            fh = None
-
-        _open()
-        rewritten = 0
-        for seg in old:
-            with _b.open_bson(seg) as src:
-                for doc in _b.decode_file_iter(src):
-                    data = _b.encode(doc)
-                    if size and size + len(data) > target_bytes:
-                        _close()
-                        _open()
-                    fh.write(data)
-                    size += len(data)
-                    n_docs += 1
-                    _track_bounds(bounds, doc)
-                    rewritten += 1
-        _close()
-
-        # commit all new segments, then remove the old ones
-        for tmp, final in new_tmp:
-            os.rename(tmp + META_SUFFIX, final + META_SUFFIX)
-            os.rename(tmp, final)
-        for seg in old:
-            os.remove(seg)
-            for extra in (seg + META_SUFFIX, bsonio.sidecar_path(seg)):
-                if os.path.exists(extra):
-                    os.remove(extra)
-        return {"before": len(old), "after": len(new_tmp),
-                "rewritten": rewritten}
+        docs = self._scan()
+        # each stage() call reads on from the shared iterator until its
+        # segment is full; the comprehension hands it the next first doc
+        staged = [self.stage(itertools.chain([first], docs),
+                             max_bytes=target_bytes) for first in docs]
+        self.commit(staged, retire=old)
+        return {"before": len(old), "after": len(staged),
+                "rewritten": sum(s.count for s in staged)}
 
     def create_index(self, keys, **options) -> str:
         """ensureIndex analog (pig/.../MongoStorage.java:237-238, W7/W10):
@@ -434,22 +430,10 @@ class DocumentStore:
     def drop(self, name: str) -> None:
         coll = self.collection(name)
         for seg in coll.segments():
-            os.remove(seg)
-            if os.path.exists(seg + META_SUFFIX):
-                os.remove(seg + META_SUFFIX)
-            sc = bsonio.sidecar_path(seg)
-            if os.path.exists(sc):
-                os.remove(sc)
-        for extra in (".indexes",):
-            p = os.path.join(coll.path, extra)
-            if os.path.exists(p):
-                os.remove(p)
-        if os.path.isdir(coll.path):
-            # leftover split sidecars of segments removed earlier (e.g. by
-            # rewrite) would make rmdir fail with 'Directory not empty'
-            for stray in glob.glob(os.path.join(coll.path, ".*.splits")):
-                os.remove(stray)
-            os.rmdir(coll.path)
+            coll.retire(seg)
+        if coll.exists():
+            # .indexes, plus what interrupted writers left behind
+            shutil.rmtree(coll.path)
 
     # --- GridFS analog -----------------------------------------------------
 

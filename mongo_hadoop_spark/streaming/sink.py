@@ -70,27 +70,16 @@ class BucketedDocumentSink:
             pid = TaskContext.get().partitionId() if TaskContext.get() else 0
             by_bucket: dict[str, list] = {}
             for row in rows:
-                d = row.asDict()
-                bucket = d.pop("__bucket")
-                by_bucket.setdefault(bucket, []).append(d)
+                d = row_to_doc(row)
+                by_bucket.setdefault(d.pop("__bucket"), []).append(d)
             store = DocumentStore(store_path)
             for bucket, docs in by_bucket.items():
                 # deterministic name per (batch, partition): a retried batch
                 # re-renames over the same segment instead of duplicating
                 store.collection(bucket).insert_many(
-                    ({k: _clean(v) for k, v in d.items()} for d in docs),
-                    segment_hint=f"b{batch_id:06d}p{pid:04d}",
-                )
+                    docs, segment_hint=f"b{batch_id:06d}p{pid:04d}")
 
         # hash-repartition by bucket so each task writes few segments; no
         # driver-side bucket list — cardinality never touches the driver
         (with_bucket.repartition(max(1, self.num_partitions), "__bucket")
          .foreachPartition(write_partition))
-
-
-def _clean(v):
-    import datetime as _dt
-
-    if isinstance(v, _dt.date) and not isinstance(v, _dt.datetime):
-        return _dt.datetime(v.year, v.month, v.day, tzinfo=_dt.timezone.utc)
-    return v

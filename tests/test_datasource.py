@@ -224,6 +224,23 @@ def test_concurrent_append_segments(registered, tmp_path):
     assert back.select("v").distinct().count() == 200
 
 
+def test_overwrite_retires_meta_then_drop(registered, tmp_path):
+    """A mongodoc overwrite retires the earlier segments together with
+    their .meta.json sidecars: count() and find() see only the new rows,
+    and drop() empties the directory."""
+    store = DocumentStore(str(tmp_path / "odb"))
+    coll = store.collection("c")
+    coll.insert_many([{"a": i} for i in range(5)])
+    assert coll.count() == 5
+    (registered.createDataFrame([(10,), (11,)], "a long")
+     .write.format("mongodoc").option("path", store.path)
+     .option("collection", "c").mode("overwrite").save())
+    assert coll.count() == 2
+    assert sorted(d["a"] for d in coll.find()) == [10, 11]
+    store.drop("c")
+    assert "c" not in store.list_collections()
+
+
 def test_write_sidecar_and_reader_reuse(registered, tmp_path):
     """W4: write_sidecar=true persists .splits beside each segment; the
     bson_file splitter then plans from the sidecar (and respects it even

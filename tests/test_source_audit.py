@@ -9,6 +9,8 @@ story rests on, enforced as tests instead of round-time grep.
   Everything else stays distributed.
 - every `crossJoin` is a broadcast 1-row scalar frame (or the $facet
   1x1xp...x1 frame chain) - never a real cartesian.
+- the segment format (temp names, segment globs, sidecar suffixes, codec
+  openers) is spelled only in store.py and bsonio.py.
 """
 
 from __future__ import annotations
@@ -70,4 +72,16 @@ def test_no_topandas_in_engine():
     # materializes both sides by design); everything else stays lazy
     bad = [p.name for p in _source_files()
            if ".toPandas()" in p.read_text() and p.name != "oracle.py"]
+    assert not bad, bad
+
+
+def test_segment_format_only_in_store_and_bsonio():
+    pat = re.compile(r"\.inprogress|_tmp_|\*\.bson|META_SUFFIX|_CODEC_OPENERS")
+    bad = []
+    for p in _source_files():
+        if p.relative_to(SRC).as_posix() in ("store.py", "bsonio.py"):
+            continue
+        for i, line in enumerate(p.read_text().splitlines(), 1):
+            if pat.search(line):
+                bad.append(f"{p.name}:{i}: {line.strip()[:80]}")
     assert not bad, bad

@@ -41,6 +41,41 @@ def test_bson_roundtrip_via_dataframe(registered, tmp_path):
     assert set(docs[0]) == {"i", "name", "v"}
 
 
+@pytest.fixture()
+def dump(registered, tmp_path):
+    """A directory already holding one two-row .bson dump."""
+    out = str(tmp_path / "dump")
+    write_bson(registered.createDataFrame([(1,), (2,)], "i long"), out)
+    return out
+
+
+def test_write_bson_error_mode_refuses_existing_segments(registered, dump):
+    df = registered.createDataFrame([(3,)], "i long")
+    with pytest.raises(FileExistsError):
+        write_bson(df, dump)
+    with pytest.raises(FileExistsError):
+        write_bson(df, dump, mode="error")
+    assert read_bson(registered, dump).count() == 2
+
+
+def test_write_bson_append_mode(registered, dump):
+    write_bson(registered.createDataFrame([(3,)], "i long"), dump, mode="append")
+    assert sorted(r.i for r in read_bson(registered, dump).collect()) == [1, 2, 3]
+
+
+def test_write_bson_overwrite_mode(registered, dump):
+    write_bson(registered.createDataFrame([(3,)], "i long"), dump,
+               mode="overwrite")
+    assert [r.i for r in read_bson(registered, dump).collect()] == [3]
+
+
+def test_write_bson_unknown_mode(registered, dump):
+    with pytest.raises(ValueError, match="mode"):
+        write_bson(registered.createDataFrame([(3,)], "i long"), dump,
+                   mode="ignore")
+    assert read_bson(registered, dump).count() == 2
+
+
 def test_read_single_bson_file(registered, tmp_path):
     p = str(tmp_path / "one.bson")
     bsonio.write_bson_file(p, ({"k": i, "tag": f"t{i%3}"} for i in range(40)))

@@ -223,3 +223,59 @@ def test_compact_respects_target_size(tmp_path):
     assert coll.count() == 160
     sizes = [__import__("os").path.getsize(s) for s in coll.segments()]
     assert max(sizes) <= 8000 + 1100        # one doc overshoot at most
+
+
+def _fail_segment_publish(monkeypatch):
+    """Make the segment rename of publish() fail (the meta rename before
+    it still succeeds), as a crash or full disk would."""
+    import os
+
+    real = os.rename
+
+    def rename(src, dst):
+        if dst.endswith(".bson"):
+            raise OSError("injected publish failure")
+        return real(src, dst)
+
+    monkeypatch.setattr(os, "rename", rename)
+
+
+def test_rewrite_failed_publish_keeps_old_documents(tmp_path, monkeypatch):
+    import pytest
+
+    store = make_store(tmp_path)
+    c = store.collection("rw")
+    c.insert_many([{"a": i} for i in range(5)])
+    _fail_segment_publish(monkeypatch)
+    with pytest.raises(OSError, match="injected"):
+        c.rewrite([{"a": 99}])
+    monkeypatch.undo()
+    assert sorted(d["a"] for d in c.find()) == list(range(5))
+    assert c.count() == 5
+    store.drop("rw")
+    assert "rw" not in store.list_collections()
+
+
+def test_overwrite_failed_publish_keeps_old_documents(tmp_path, monkeypatch):
+    """The mongodoc overwrite commit publishes before it retires: a failed
+    publish leaves the documents that were there before."""
+    import pytest
+    from pyspark.sql import Row
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from mongo_hadoop_spark.sources.mongo_datasource import DocumentWriter
+
+    store = make_store(tmp_path)
+    c = store.collection("ow")
+    c.insert_many([{"a": i} for i in range(5)])
+    writer = DocumentWriter({"path": store.path, "collection": "ow"},
+                            StructType([StructField("a", LongType())]),
+                            overwrite=True)
+    message = writer.write(iter([Row(a=99)]))
+    _fail_segment_publish(monkeypatch)
+    with pytest.raises(OSError, match="injected"):
+        writer.commit([message])
+    monkeypatch.undo()
+    writer.abort([message])
+    assert sorted(d["a"] for d in c.find()) == list(range(5))
+    assert c.count() == 5

@@ -388,6 +388,38 @@ def test_bucketed_sink_max_buckets_cap(spark, tmp_path):
     assert DocumentStore(store_path).list_collections()
 
 
+def test_bucketed_sink_nested_values(spark, tmp_path):
+    """Struct columns land as sub-documents and dates inside structs and
+    arrays as UTC datetimes, and read back through mongodoc."""
+    import datetime as dt
+
+    from mongo_hadoop_spark.sources import register
+
+    register(spark)
+    store_path = str(tmp_path / "nestdb")
+    days = [dt.date(2024, 1, 2), dt.date(2024, 3, 4)]
+    df = spark.createDataFrame(
+        [(1, ("s1", [1.0], days[0]), days)],
+        "id long, loc struct<site:string, xs:array<double>, since:date>, "
+        "days array<date>")
+    BucketedDocumentSink(store_path, "nested")(df, batch_id=0)
+
+    utc = [dt.datetime(d.year, d.month, d.day, tzinfo=dt.timezone.utc)
+           for d in days]
+    (doc,) = DocumentStore(store_path).collection("nested").find()
+    assert doc["loc"] == {"site": "s1", "xs": [1.0], "since": utc[0]}
+    assert doc["days"] == utc
+    back = (spark.read.format("mongodoc").option("path", store_path)
+            .option("collection", "nested").load())
+    (row,) = back.select(
+        "loc.site", "loc.xs",
+        F.col("loc.since").cast("long").alias("since"),
+        F.transform("days", lambda d: d.cast("long")).alias("days"),
+    ).collect()
+    epoch = [int(u.timestamp()) for u in utc]
+    assert (row.site, row.xs, row.since, row.days) == ("s1", [1.0], epoch[0], epoch)
+
+
 def test_stream_dedup_events_collapses_redeliveries(spark, events_dir, tmp_path):
     """Duplicated input files (at-least-once redelivery) dedup to the
     batch-distinct result."""

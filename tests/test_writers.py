@@ -3,6 +3,8 @@ commit protocol (reference W1/W2/W6/W8 semantics, sensors/treasury jobs)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from mongo_hadoop_spark.sinks import UpdateSpec, write_documents
@@ -270,3 +272,97 @@ def test_target_from_uri_resolves_namespace(spark, tmp_path):
 
     with pytest.raises(InvalidMongoURI, match="namespace"):
         target_from_uri("mongodb://h1:27017/outdb", client_factory=FakeClient)
+
+
+# ---------------------------------------------------------------------------
+# Writer conformance: every writer commits through the store's
+# stage → publish → retire protocol and reads back what it was given.
+# ---------------------------------------------------------------------------
+
+CONFORMANCE_DOCS = [
+    {"k": i, "s": f"v{i}", "sub": {"x": i * 0.5, "tags": ["a", f"t{i % 3}"]}}
+    for i in range(40)
+]
+CONFORMANCE_SCHEMA = "k long, s string, sub struct<x:double, tags:array<string>>"
+
+
+def _conformance_df(spark):
+    from mongo_hadoop_spark.sources import register
+
+    register(spark)
+    rows = [(d["k"], d["s"], (d["sub"]["x"], d["sub"]["tags"]))
+            for d in CONFORMANCE_DOCS]
+    return spark.createDataFrame(rows, CONFORMANCE_SCHEMA).repartition(3)
+
+
+def _mongodoc(mode, **options):
+    def write(spark, coll):
+        w = (_conformance_df(spark).write.format("mongodoc")
+             .option("path", os.path.dirname(coll.path))
+             .option("collection", coll.name))
+        for k, v in options.items():
+            w = w.option(k, v)
+        w.mode(mode).save()
+    return write
+
+
+def _overwrite(spark, coll):
+    coll.insert_many([{"k": -1, "old": True}])
+    _mongodoc("overwrite")(spark, coll)
+
+
+def _rewrite(spark, coll):
+    coll.insert_many([{"k": -1, "old": True}])
+    coll.rewrite(CONFORMANCE_DOCS)
+
+
+def _compact(spark, coll):
+    for i in range(0, 40, 10):
+        coll.insert_many(CONFORMANCE_DOCS[i:i + 10])
+    coll.compact(target_bytes=800)
+
+
+def _bucketed(spark, coll):
+    from mongo_hadoop_spark.streaming import BucketedDocumentSink
+
+    BucketedDocumentSink(os.path.dirname(coll.path), coll.name)(
+        _conformance_df(spark), batch_id=0)
+
+
+WRITERS = {
+    "insert_many": lambda spark, coll: coll.insert_many(CONFORMANCE_DOCS),
+    "mongodoc_append": _mongodoc("append"),
+    "mongodoc_overwrite": _overwrite,
+    "mongodoc_gzip": _mongodoc("append", compression="gzip"),
+    "write_documents_insert": lambda spark, coll: write_documents(
+        _conformance_df(spark), os.path.dirname(coll.path), coll.name),
+    "bucketed_sink": _bucketed,
+    "rewrite": _rewrite,
+    "compact": _compact,
+}
+
+
+@pytest.mark.parametrize("writer", sorted(WRITERS))
+def test_writer_conformance(spark, tmp_path, writer):
+    import json
+
+    from mongo_hadoop_spark import bsonio
+    from mongo_hadoop_spark.store import META_SUFFIX
+
+    coll = DocumentStore(str(tmp_path / "db")).collection("c")
+    WRITERS[writer](spark, coll)
+
+    segs = coll.segments()
+    assert segs
+    committed = {os.path.basename(p) for s in segs for p in (s, s + META_SUFFIX)}
+    assert set(os.listdir(coll.path)) == committed
+    docs = []
+    for seg in segs:
+        with bsonio.open_bson(seg) as f:
+            seg_docs = list(bsonio.decode_file_iter(f))
+        with open(seg + META_SUFFIX) as f:
+            assert json.load(f)["count"] == len(seg_docs), seg
+        docs.extend(seg_docs)
+    assert sorted(docs, key=lambda d: d["k"]) == CONFORMANCE_DOCS
+    if writer == "compact":
+        assert len(segs) > 1
