@@ -86,8 +86,7 @@ BENCH_QUERIES = BENCH_QUERIES + BENCH_QUERIES_R9
 
 # round 10 additions (r9 verdict item 2: the heaviest still-unbenched
 # surfaces named by the judge — authority dedup, connected components,
-# WordPiece, PCA whitening — plus this round's new gates).  R9_SET keeps
-# the r9 72-query subtotal as the cross-round comparison line.
+# WordPiece, PCA whitening — plus this round's new gates).
 BENCH_QUERIES_R10 = [
     "dedup_survivors_by_authority", "dedup_connected_clusters",
     "corpus_wordpiece_compression", "embedding_pca_whitened",
@@ -95,18 +94,15 @@ BENCH_QUERIES_R10 = [
     "pipeline_window_percentiles_approx", "pipeline_datediff_weekstarts",
     "ivf_pq_knn_fixed",
 ]
-R9_SET = frozenset(BENCH_QUERIES)
 BENCH_QUERIES = BENCH_QUERIES + BENCH_QUERIES_R10
 
 # round 11 addition: the per-cell-capped SemDeDup composition (the gated
-# hot-cell mitigation).  R10_SET keeps the r10 81-query subtotal as the
-# cross-round comparison line.
+# hot-cell mitigation).
 BENCH_QUERIES_R11 = ["dedup_semantic_survivors_ivf_capped"]
-R10_SET = frozenset(BENCH_QUERIES)
 BENCH_QUERIES = BENCH_QUERIES + BENCH_QUERIES_R11
 
 # round 12 additions: calendar-unit $densify gates + the SemDeDup
-# cell-density overflow report.  R11_SET keeps the r11 82-query subtotal.
+# cell-density overflow report.
 BENCH_QUERIES_R12 = ["pipeline_densify_monthly", "pipeline_densify_quarterly",
                      "dedup_semantic_cell_density",
                      "pipeline_window_top_orders",
@@ -117,7 +113,6 @@ BENCH_QUERIES_R12 = ["pipeline_densify_monthly", "pipeline_densify_quarterly",
                      "pipeline_merge_objects_rollup",
                      "pipeline_lookup_uncorrelated",
                      "pipeline_dotted_paths"]
-R11_SET = frozenset(BENCH_QUERIES)
 BENCH_QUERIES = BENCH_QUERIES + BENCH_QUERIES_R12
 
 
@@ -210,15 +205,6 @@ def main() -> None:
         # basis (the full total grows with every widening)
         "r8_subset_total_sec": r8_subtotal,
         "r8_subset_n": len(R8_SET),
-        "r9_subset_total_sec": round(
-            sum(v for k, v in timings.items() if k in R9_SET), 3),
-        "r9_subset_n": len(R9_SET),
-        "r10_subset_total_sec": round(
-            sum(v for k, v in timings.items() if k in R10_SET), 3),
-        "r10_subset_n": len(R10_SET),
-        "r11_subset_total_sec": round(
-            sum(v for k, v in timings.items() if k in R11_SET), 3),
-        "r11_subset_n": len(R11_SET),
         "queries": timings,
         # plan-output sanity across rounds: a timing shift that comes with
         # a row-count shift is a semantics change, not a perf change
@@ -291,7 +277,6 @@ def main() -> None:
     # This short line always fits at the end of any tail.
     compact = {k: out[k] for k in ("metric", "value", "unit",
                                    "r8_subset_total_sec", "r8_subset_n",
-                                   "r10_subset_total_sec", "r10_subset_n",
                                    "sf",
                                    "repeats", "timing", "materialize",
                                    "n_queries",

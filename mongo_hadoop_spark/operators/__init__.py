@@ -105,18 +105,12 @@ _HEAD_KEYS = [
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from mongo_hadoop_spark.invocation import scoped
-
     merged: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     for m in _MODULES:
         overlap = merged.keys() & m.QUERIES.keys()
         if overlap:
             raise ValueError(f"duplicate query keys: {overlap}")
-        # scoped: every registered query runs under a fresh per-invocation
-        # memo scope (r13 verdict item 1 — shared trained-state/tokenized-
-        # stream subtrees are deduplicated WITHIN one invocation's plan,
-        # never across invocations or sibling queries)
-        merged.update({k: scoped(fn) for k, fn in m.QUERIES.items()})
+        merged.update(m.QUERIES)
     missing = [k for k in _HEAD_KEYS if k not in merged]
     if missing:
         raise ValueError(f"unknown head keys: {missing}")

@@ -275,7 +275,11 @@ def events_value_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mean = F.col("s1d") / F.col("n")
     var = F.col("s2d") / F.col("n") - mean * mean
-    z = (F.col("value") - mean) / F.sqrt(var)
+    # a zero-variance user (one event, or all values equal) has no z:
+    # NULL, as DuckDB's x/0.0, so the row fails the filter instead of
+    # raising DIVIDE_BY_ZERO under ANSI.  var < 0 is the same case with
+    # a rounding error (0.1² ≠ 0.01 in binary), not a NaN row.
+    z = F.when(var > 0, (F.col("value") - mean) / F.sqrt(var))
     return (
         e.select("event_id", "user_id", "value")
         .join(F.broadcast(stats), "user_id")

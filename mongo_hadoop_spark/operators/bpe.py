@@ -15,7 +15,7 @@ Scale design — the production BPE-trainer shape:
   DESC, pair ASC LIMIT 1 — ``TakeOrderedAndProject``, never a global
   sort) → merge application as a 1-row broadcast join + a per-row
   ``replace`` on the space-joined symbol string.
-- Rounds are materialized via ``localCheckpoint`` (the graph-operator
+- Rounds are materialized (``session.materialize``, the graph-operator
   pattern) so the K-round lineage doesn't re-execute prior rounds
   exponentially.
 
@@ -50,7 +50,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from mongo_hadoop_spark.functions import tokenize
-from mongo_hadoop_spark.session import table
+from mongo_hadoop_spark.session import materialize, table
 
 #: number of merge rounds learned (and unrolled in the oracle)
 BPE_MERGES = 6
@@ -102,27 +102,17 @@ def _apply_merge(w: DataFrame, merge: DataFrame) -> DataFrame:
             .select("word", "freq", F.expr(_APPLY_SEG).alias("seg")))
 
 
-def _train_cached(spark: SparkSession, sf_dir: str, variant: str, loop):
-    """One training run per variant per QUERY INVOCATION (r13, verdict
-    item 1): the r12-era module-level dictionary memoized the trained
-    (merges, words) pair for the whole application — bench repeats 2-3
-    and every sibling query in this module then read the first run's
-    checkpointed rounds, so best-of-N never timed training.  The
-    ``invocation.memo`` scope keeps the legitimate sharing (a query that
-    needs both the merge list and the final word table trains once) and
-    makes every invocation retrain from parquet."""
-    from mongo_hadoop_spark.invocation import memo
-
-    return memo(("bpe_train", sf_dir, variant),
-                lambda: loop(spark, sf_dir))
-
-
 def _train(spark: SparkSession, sf_dir: str):
     """Run the merge loop; returns (merge DataFrames list, final words).
 
-    Each round's word table is localCheckpoint-materialized: the round
-    output is vocabulary-sized, and without truncation round r's lazy
-    plan would re-execute rounds 1..r-1 once per consumer.
+    Each round's word table is materialized: the round output is
+    vocabulary-sized, and without truncation round r's lazy plan would
+    re-execute rounds 1..r-1 once per consumer.  The materializations
+    are lazy — nothing in the loop needs a value on the driver (fixed
+    BPE_MERGES rounds, no convergence check), so the final stage of
+    each round runs inside the consumer's first action instead of
+    paying 2·BPE_MERGES+1 eager driver-action round-trips (guide
+    §1.5/§5.4).
 
     Degenerate corpora (every word a single symbol — no adjacent pairs
     left) drain the loop: the round's argmax is empty, the cross join
@@ -130,24 +120,12 @@ def _train(spark: SparkSession, sf_dir: str):
     absent.  The oracle's CROSS JOIN propagates emptiness the same way,
     so both engines agree exactly (pinned in tests/test_bpe.py); real
     corpora never get near this inside BPE_MERGES rounds."""
-    return _train_cached(spark, sf_dir, "bpe", _train_uncached)
-
-
-def _train_uncached(spark: SparkSession, sf_dir: str):
-    # r13 (guide §1.5/§5.4): LAZY checkpoints — nothing in the loop needs
-    # a value on the driver (fixed BPE_MERGES rounds, no convergence
-    # check), so the whole training chain materializes in dependency
-    # order inside the CONSUMER's first action instead of paying
-    # 2·BPE_MERGES+1 eager driver-action round-trips.  Each round is
-    # still materialized exactly once (a lazy localCheckpoint computes on
-    # first use, then every later reference reads the stored partitions),
-    # so lineage stays flat and round r never re-executes rounds < r.
-    w = _word_table(spark, sf_dir).localCheckpoint(eager=False)
+    w = materialize(_word_table(spark, sf_dir), "bpe word table")
     merges = []
-    for _ in range(BPE_MERGES):
-        m = _top_merge(_pair_counts(w)).localCheckpoint(eager=False)
+    for r in range(1, BPE_MERGES + 1):
+        m = materialize(_top_merge(_pair_counts(w)), f"bpe merge {r}")
         merges.append(m)
-        w = _apply_merge(w, m).localCheckpoint(eager=False)
+        w = materialize(_apply_merge(w, m), f"bpe words after merge {r}")
     return merges, w
 
 
@@ -262,18 +240,14 @@ def corpus_wordpiece_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _train_wordpiece(spark: SparkSession, sf_dir: str):
     """The WordPiece merge loop (likelihood argmax); same
-    checkpointed-round shape as :func:`_train`."""
-    return _train_cached(spark, sf_dir, "wordpiece", _train_wordpiece_uncached)
-
-
-def _train_wordpiece_uncached(spark: SparkSession, sf_dir: str):
-    # lazy checkpoints for the same reason as _train_uncached above
-    w = _word_table(spark, sf_dir).localCheckpoint(eager=False)
+    materialized-round shape as :func:`_train`."""
+    w = materialize(_word_table(spark, sf_dir), "wordpiece word table")
     merges = []
-    for _ in range(BPE_MERGES):
-        m = _top_wordpiece_merge(w).localCheckpoint(eager=False)
+    for r in range(1, BPE_MERGES + 1):
+        m = materialize(_top_wordpiece_merge(w), f"wordpiece merge {r}")
         merges.append(m)
-        w = _apply_merge(w, m.select("pair")).localCheckpoint(eager=False)
+        w = materialize(_apply_merge(w, m.select("pair")),
+                        f"wordpiece words after merge {r}")
     return merges, w
 
 

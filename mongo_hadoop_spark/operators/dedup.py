@@ -34,7 +34,7 @@ from mongo_hadoop_spark.functions import (md5_long, md5_long_spark_sql,
                                           md5_long_sql, tokenize,
                                           word_shingles)
 from mongo_hadoop_spark.guards import guard_quadratic
-from mongo_hadoop_spark.session import table
+from mongo_hadoop_spark.session import materialize, table
 
 # ---------------------------------------------------------------------------
 # Exact dedup: keep the lowest doc_id per distinct text
@@ -208,12 +208,8 @@ def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Materialize signatures: they feed the band unpivot AND both sides
     # of the estimate join — without it Spark recomputes the explode+agg
     # pipeline per reference.  At scale this table is tiny relative to
-    # the corpus (K longs per doc).  localCheckpoint, NOT persist (r13):
-    # persist() registers the deterministic plan in the CacheManager and
-    # later invocations of ANY query embedding the same signature plan
-    # would silently read this invocation's cache — the cross-invocation
-    # reuse the r12 judge ruled out.
-    sig = _signatures(spark, sf_dir).localCheckpoint(eager=False)
+    # the corpus (K longs per doc).
+    sig = materialize(_signatures(spark, sf_dir), "minhash signatures")
     stack_args = []
     for b in range(LSH_BANDS):
         cols = ", ".join(f"CAST(h{b * _ROWS_PER_BAND + r} AS STRING)"
@@ -653,12 +649,10 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
-    # localCheckpoint, not persist (r13): same CacheManager
-    # cross-invocation-reuse rationale as _signatures above
-    sets = d.select(
+    sets = materialize(d.select(
         "doc_id",
         F.array_distinct(word_shingles("text", SHINGLE_N)).alias("sh"),
-    ).localCheckpoint(eager=False)
+    ), "containment shingle sets")
     inv = sets.select("doc_id", F.explode("sh").alias("s"))
     rare = (inv.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
             .where(F.col("df") <= CONTAIN_MAX_DF))
@@ -758,28 +752,30 @@ def connected_component_labels(pairs: DataFrame, a: str, b: str) -> DataFrame:
     jumping superstep loop factored out of
     :func:`dedup_connected_clusters` so any pair generator (and the
     adversarial-topology pytest pins) can cluster through it."""
-    # localCheckpoint (not persist): each superstep references labels
-    # THREE times (self, neighbor join, jump join), so an un-truncated
-    # logical plan grows 3^rounds — a path graph deep enough to need 10+
-    # rounds OOMs the DRIVER on plan size alone.  Checkpointing truncates
-    # lineage to the materialized partitions each round; a cluster
-    # deployment would point this at a reliable checkpoint dir instead
-    # of executor-local storage.
-    # eager=False (r13, guide §1.5): edges/labels materialize inside the
-    # FIRST superstep's checkpoint action — the eager form paid two
-    # extra blocking driver jobs before the loop even started.  (The
-    # per-round checkpoint below stays eager: the Observation-based
-    # convergence scalar needs the round's action to have run.)
-    edges = (pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
-             .unionByName(pairs.select(F.col(b).alias("src"),
-                                       F.col(a).alias("dst")))
-             .localCheckpoint(eager=False))
-    labels = (edges.select(F.col("src").alias("node")).distinct()
-              .select("node", F.col("node").alias("label"))
-              .localCheckpoint(eager=False))
+    # Materialized: each superstep references labels THREE times (self,
+    # neighbor join, jump join), so an un-truncated logical plan grows
+    # 3^rounds — a path graph deep enough to need 10+ rounds OOMs the
+    # DRIVER on plan size alone.  Materializing truncates lineage to the
+    # stored partitions each round; a cluster deployment would point
+    # this at a reliable checkpoint dir instead of executor-local
+    # storage.
+    # Lazy (r13, guide §1.5): edges/labels materialize inside the FIRST
+    # superstep's action — the eager form paid two extra blocking driver
+    # jobs before the loop even started.  (The per-round materialization
+    # below stays eager: the Observation-based convergence scalar needs
+    # the round's action to have run.)
+    edges = materialize(
+        pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
+        .unionByName(pairs.select(F.col(b).alias("src"),
+                                  F.col(a).alias("dst"))),
+        "cc edges")
+    labels = materialize(
+        edges.select(F.col("src").alias("node")).distinct()
+        .select("node", F.col("node").alias("label")),
+        "cc initial labels")
     from pyspark.sql import Observation
 
-    for _ in range(CC_MAX_ROUNDS):
+    for r in range(1, CC_MAX_ROUNDS + 1):
         nbr = (edges.join(labels, edges.src == labels.node)
                .select(F.col("dst").alias("node"), "label"))
         l2 = labels.select(F.col("node").alias("j_node"),
@@ -803,11 +799,12 @@ def connected_component_labels(pairs: DataFrame, a: str, b: str) -> DataFrame:
         # not as a failed convergence check (r12 advisor: `None == 0` is
         # False, so an empty graph used to spin all CC_MAX_ROUNDS and
         # raise).
-        chk = (new.join(labels.withColumnRenamed("label", "old"), "node")
-               .observe(obs, F.coalesce(
-                   F.sum((F.col("label") != F.col("old")).cast("long")),
-                   F.lit(0).cast("long")).alias("changed"))
-               .localCheckpoint())
+        chk = materialize(
+            new.join(labels.withColumnRenamed("label", "old"), "node")
+            .observe(obs, F.coalesce(
+                F.sum((F.col("label") != F.col("old")).cast("long")),
+                F.lit(0).cast("long")).alias("changed")),
+            f"cc superstep {r}", eager=True)
         labels = chk.select("node", "label")
         if obs.get["changed"] == 0:
             return labels
@@ -923,21 +920,25 @@ def corpus_crawl_increment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def build_seen_index(seen_docs: DataFrame) -> dict:
-    """Precompute (and persist) the seen-corpus artifacts the crawl
+    """Precompute and materialize the seen-corpus artifacts the crawl
     classifier probes: distinct content keys, MinHash signatures, LSH
     band rows.  Built ONCE per corpus; a streaming ingest classifies
     every micro-batch against the same index (see
-    ``streaming.jobs.stream_crawl_classify``)."""
-    # localCheckpoint, not persist (r13): the index artifacts stay
-    # materialized for the lifetime of the returned handles — a stream
-    # holds ONE dict across its micro-batches exactly as before — but a
-    # fresh batch invocation builds its own RDDs instead of silently
-    # reading a previous invocation's CacheManager entry.
-    keys = (seen_docs.select(F.md5("text").alias("k")).distinct()
-            .localCheckpoint(eager=False))
-    sig = signatures_for(seen_docs, "__mh_sig_seen") \
-        .localCheckpoint(eager=False)
-    bands = band_rows(sig).localCheckpoint(eager=False)
+    ``streaming.jobs.stream_crawl_classify``).
+
+    The artifacts stay materialized as long as the returned handles are
+    referenced.  Durability trade-off: they are local checkpoints
+    (:func:`~mongo_hadoop_spark.session.materialize`), so their blocks
+    live on executor storage and are not recomputable — if an executor
+    is lost, every later probe of the index fails.  A long-lived stream
+    must then rebuild the index (call this again and restart the stream
+    with the new handles); a cluster deployment that cannot afford that
+    should write the index to reliable storage instead."""
+    keys = materialize(seen_docs.select(F.md5("text").alias("k")).distinct(),
+                       "seen index keys")
+    sig = materialize(signatures_for(seen_docs, "__mh_sig_seen"),
+                      "seen index signatures")
+    bands = materialize(band_rows(sig), "seen index bands")
     return {"keys": keys, "sig": sig, "bands": bands}
 
 

@@ -25,7 +25,7 @@ are produced by a fixed iteration budget.
 Scale shape: each superstep is one keyed equi-join (contributions onto
 edge sources) plus one keyed aggregation (sum per destination) — both
 shuffle-partitioned on node id, no single-task stage, no driver data.
-``edges``/``deg`` are localCheckpoint-ed once (they are reused every
+``edges``/``deg`` are materialized once (they are reused every
 round); ranks flow through the 8-round plan linearly (each round
 references the previous once, so no 3^rounds lineage blow-up — unlike
 the CC loop, no checkpoint-per-round is needed).  Per-node sums are
@@ -48,6 +48,7 @@ from mongo_hadoop_spark.operators.dedup import (
     CC_MAX_ROUNDS, EDGES_CTE_SQL, MINHASH_VERIFIED_SQL, _cc_label_ctes,
     connected_component_labels, dedup_minhash_verified,
 )
+from mongo_hadoop_spark.session import materialize
 
 PR_SCALE = 10 ** 12      # fixed-point scale: 1.0 == 1e12
 PR_DAMP_NUM = 17         # damping 0.85 == 17/20, exact in integers
@@ -85,14 +86,14 @@ def _pagerank_loop(edges: DataFrame) -> DataFrame:
     (src, dst) edge list — the loop factored out so the authority-
     survivors composition can run it on an already-materialized pair
     set instead of regenerating pairs."""
-    # edges/deg are reused by all rounds: checkpoint once so the 8-round
-    # plan re-reads materialized partitions instead of re-running the
-    # upstream subplan (LSH+verify) per round.  eager=False (r13, guide
-    # §1.5): both materialize inside the consumer's OWN first action —
-    # the eager form paid two extra blocking driver jobs per query.
-    edges = edges.localCheckpoint(eager=False)
-    deg = edges.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("deg")).localCheckpoint(eager=False)
+    # edges/deg are reused by all rounds: materialize once so the
+    # 8-round plan re-reads stored partitions instead of re-running the
+    # upstream subplan (LSH+verify) per round.  Lazy (r13, guide §1.5):
+    # both materialize inside the consumer's OWN first action — the
+    # eager form paid two extra blocking driver jobs per query.
+    edges = materialize(edges, "pagerank edges")
+    deg = materialize(edges.groupBy(F.col("src").alias("node")).agg(
+        F.count(F.lit(1)).alias("deg")), "pagerank degrees")
 
     ranks = deg.select("node", F.lit(PR_SCALE).cast("long").alias("rank_fp"),
                        "deg")
@@ -203,7 +204,7 @@ def dedup_survivors_by_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
     is inner and lossless.
 
     Scale shape: the expensive part — LSH+verify pair generation — runs
-    ONCE (localCheckpoint) and feeds BOTH the label propagation and the
+    ONCE (materialized) and feeds BOTH the label propagation and the
     PageRank loop (the oracle shares its ``vpairs``/``edges`` CTEs the
     same way); on top sit one keyed agg (cluster sizes), two keyed
     joins, and a row_number window PARTITIONED BY cluster —
@@ -216,10 +217,10 @@ def dedup_survivors_by_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    # eager=False (r13): the pair set materializes inside the first CC
+    # lazy (r13): the pair set materializes inside the first CC
     # superstep's own action instead of a separate blocking driver job
-    pairs = (dedup_minhash_verified(spark, sf_dir)
-             .select("doc_a", "doc_b").localCheckpoint(eager=False))
+    pairs = materialize(dedup_minhash_verified(spark, sf_dir)
+                        .select("doc_a", "doc_b"), "authority pairs")
     labels = connected_component_labels(pairs, "doc_a", "doc_b")
     edges = (pairs.select(F.col("doc_a").alias("src"),
                           F.col("doc_b").alias("dst"))

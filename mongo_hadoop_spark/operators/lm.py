@@ -36,7 +36,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from mongo_hadoop_spark.functions import tokenize
-from mongo_hadoop_spark.session import table
+from mongo_hadoop_spark.session import materialize, table
 
 _WORDS_SQL = r"list_filter(string_split_regex(text, '\s+'), x -> x <> '')"
 
@@ -479,7 +479,7 @@ def _doremi_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("c_st"))
     vocab = st.groupBy("term").agg(F.sum("c_st").cast("long").alias("c"))
     total = vocab.agg(F.sum("c").alias("n_total"))
-    base = (
+    base = materialize(
         st.join(F.broadcast(vocab), "term")
         .crossJoin(F.broadcast(total))
         .select(
@@ -492,11 +492,10 @@ def _doremi_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "source", "n_tokens",
             F.expr("(1000 * sum_bits) div n_tokens").alias("loss_millibits"),
-        )
-        .localCheckpoint()
-    )
+        ),
+        "doremi domain losses", eager=True)
     w = base.withColumn("w", F.lit(DOREMI_SCALE).cast("long"))
-    for _ in range(DOREMI_ROUNDS):
+    for r in range(1, DOREMI_ROUNDS + 1):
         ref = w.agg(F.expr("sum(w * loss_millibits) div sum(w)")
                     .alias("ref"))
         upd = w.crossJoin(F.broadcast(ref)).select(
@@ -505,12 +504,12 @@ def _doremi_table(spark: SparkSession, sf_dir: str) -> DataFrame:
                    f"least(greatest(loss_millibits - ref, 0L), "
                    f"{DOREMI_CLAMP}L))) div {DOREMI_SCALE}L").alias("w"))
         mass = upd.agg(F.sum("w").alias("wt"))
-        # checkpoint per round: the plan otherwise triples in size each
+        # materialize per round: the plan otherwise triples in size each
         # iteration (w feeds ref AND upd; upd feeds mass AND the renorm)
-        w = upd.crossJoin(F.broadcast(mass)).select(
+        w = materialize(upd.crossJoin(F.broadcast(mass)).select(
             "source", "n_tokens", "loss_millibits",
             F.expr(f"(w * {DOREMI_RENORM}L) div wt").alias("w")
-        ).localCheckpoint()
+        ), f"doremi round {r}", eager=True)
     return w
 
 

@@ -18,7 +18,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from mongo_hadoop_spark.session import table
+from mongo_hadoop_spark.session import materialize, table
 from mongo_hadoop_spark.functions import tokenize
 
 MIN_TOKENS = 20
@@ -193,18 +193,9 @@ FROM clean GROUP BY 1, 2
 def _tokenized_base(spark: SparkSession, sf_dir: str,
                     with_text: bool = False) -> DataFrame:
     """(doc_id, lang, source, ws, nsym[, text]) — the corpus scanned and
-    whitespace-tokenized ONCE per query invocation, lazily
-    localCheckpoint-ed so every funnel stage in that invocation's plan
-    reads the materialized tokenized stream instead of re-scanning
-    parquet and re-splitting text.  The checkpoint is the production
-    shape for a multi-consumer token stream: MEMORY_AND_DISK on the
-    executors, lineage truncated, computed on first use within the job.
-
-    r13 (verdict item 1): the r12 session-lifetime memo dictionary is
-    gone — sharing is scoped to ONE top-level query call via
-    ``invocation.memo`` (the funnel body and its scores/span-stats
-    helpers all read one checkpoint inside one plan), and every
-    invocation re-tokenizes from parquet.
+    whitespace-tokenized ONCE, materialized so every funnel stage reads
+    the tokenized stream instead of re-scanning parquet and re-splitting
+    text.  A query calls this once and passes the frame to every stage.
 
     The raw text column is DROPPED by default (the tokens nearly
     duplicate it, so carrying both doubles the materialized bytes); the
@@ -213,22 +204,17 @@ def _tokenized_base(spark: SparkSession, sf_dir: str,
     consumers that re-derive differently-cased tokens (the BPE token
     budget).
     """
-    from mongo_hadoop_spark.invocation import memo
     from mongo_hadoop_spark.operators.textstats import gopher_nsym
 
-    def build() -> DataFrame:
-        cols = ["doc_id", "lang", "source",
-                tokenize("text").alias("ws"), gopher_nsym().alias("nsym")]
-        if with_text:
-            cols.insert(3, F.col("text"))
-        return (
-            table(spark, sf_dir, "documents")
-            .repartition(spark.sparkContext.defaultParallelism)
-            .select(*cols)
-            .localCheckpoint(eager=False)
-        )
-
-    return memo(("tokenized_base", sf_dir, with_text), build)
+    cols = ["doc_id", "lang", "source",
+            tokenize("text").alias("ws"), gopher_nsym().alias("nsym")]
+    if with_text:
+        cols.insert(3, F.col("text"))
+    return materialize(
+        table(spark, sf_dir, "documents")
+        .repartition(spark.sparkContext.defaultParallelism)
+        .select(*cols),
+        "tokenized documents")
 
 
 def _ppl_dsir_scores_from(base: DataFrame) -> DataFrame:
@@ -266,19 +252,17 @@ def _ppl_dsir_scores_from(base: DataFrame) -> DataFrame:
     # r13: dt is referenced TWICE (the tl→vocab→model fit chain and the
     # final per-doc application join), and without materialization the
     # explode + token-volume partial aggregation — the single heaviest
-    # stage of every funnel — executed once per reference.  The lazy
-    # localCheckpoint makes it one token pass per invocation (guide
+    # stage of every funnel — executed once per reference (guide
     # §2.4/§5); dt is (doc, lang, term, count) — far smaller than the
     # token stream it summarizes.
-    dt = (toks.groupBy("doc_id", "lang", "term")
-          .agg(F.count(F.lit(1)).alias("c_dt"))
-          .localCheckpoint(eager=False))
+    dt = materialize(toks.groupBy("doc_id", "lang", "term")
+                     .agg(F.count(F.lit(1)).alias("c_dt")),
+                     "funnel doc-term counts")
     # tl is read by every branch of the model fit (vocab → vb → raw /
     # term_model, tgt, total) — materialized so each branch re-aggregates
     # the vocabulary-sized (term, lang) table, not the (doc, term) table
-    tl = (dt.groupBy("term", "lang").agg(
-        F.sum("c_dt").cast("long").alias("c_tl"))
-        .localCheckpoint(eager=False))
+    tl = materialize(dt.groupBy("term", "lang").agg(
+        F.sum("c_dt").cast("long").alias("c_tl")), "funnel term-lang counts")
     vocab = tl.groupBy("term").agg(F.sum("c_tl").cast("long").alias("c"))
     vb = vocab.select("term", "c", F.expr(_BUCKET_SPARK).alias("bucket"))
     raw = vb.groupBy("bucket").agg(F.sum("c").cast("long").alias("c_r"))
@@ -320,49 +304,7 @@ def _ppl_dsir_scores_from(base: DataFrame) -> DataFrame:
     )
 
 
-def _scores_table(spark: SparkSession, sf_dir: str,
-                  base: DataFrame) -> DataFrame:
-    """(doc_id, n_tokens, surprisal_bits, avg_q20_per_token) — the
-    per-document model-score table, lazily localCheckpoint-ed and shared
-    WITHIN one query invocation.
-
-    Why the checkpoint (r12 optimization, kept): the scores subtree is
-    the heaviest piece of every funnel gate (~2.2 s at sf0.1) and each
-    gate's plan references it TWICE (the percentile cuts and the doc_id
-    join) — without materialization Catalyst executed the whole subtree
-    once per reference (zero ReusedExchange).  Why per-invocation (r13,
-    verdict item 1): the r12 session-lifetime memo let bench repeats 2-3
-    and sibling funnel queries read the first run's blocks; now the
-    scope is one top-level query call and every invocation re-fits from
-    the corpus.  ``base`` is the invocation's checkpointed tokenized
-    stream (scores use only doc_id/lang/ws, so the with-text variant
-    yields bit-identical scores)."""
-    from mongo_hadoop_spark.invocation import memo
-
-    return memo(("scores_table", sf_dir), lambda: (
-        _ppl_dsir_scores_from(base)
-        .select("doc_id", "n_tokens", "surprisal_bits",
-                "avg_q20_per_token")
-        .localCheckpoint(eager=False)))
-
-
-def _span_stats_table(spark: SparkSession, sf_dir: str,
-                      base: DataFrame) -> DataFrame:
-    """(doc_id, dup_frac) — the winnowed span-dedup statistics over the
-    invocation's tokenized stream.  Referenced ONCE per funnel plan (the
-    doc_id join), so no checkpoint of its own — the r12 one existed only
-    to feed the session-lifetime memo (removed, r13 verdict item 1); the
-    subtree executes exactly once either way, reading the shared
-    ``base`` checkpoint."""
-    from mongo_hadoop_spark.invocation import memo
-    from mongo_hadoop_spark.operators.spans import span_stats_from
-
-    return memo(("span_stats_table", sf_dir), lambda: (
-        span_stats_from(base).select("doc_id", "dup_frac")))
-
-
-def _funnel_inputs(spark: SparkSession, sf_dir: str, base: DataFrame,
-                   percentile_accuracy: int | None = None):
+def _funnel_inputs(base: DataFrame, percentile_accuracy: int | None = None):
     """The four per-doc funnel tables + the 1-row threshold frame shared
     by corpus_pretrain_manifest and corpus_pretrain_token_budget.
 
@@ -373,26 +315,32 @@ def _funnel_inputs(spark: SparkSession, sf_dir: str, base: DataFrame,
     summary, rank-exact while accuracy > 2·n_docs — see
     plans/aggpipe.py `_APPROX_PCTL`).
 
-    The per-doc scores table is lazily ``localCheckpoint``-ed (and since
-    r13 invocation-scoped via :func:`_scores_table`): it feeds BOTH the
-    percentile cuts and the doc_id join, and without the materialization
-    Catalyst executed the whole scores subtree once per consumer (three
-    times before r8 — the r7 probe's 1.45× at 8× was exactly this; zero
-    ReusedExchange in the physical plan).  Scores are doc-count-sized
-    and 4 columns wide — the canonical two-pass-quantile materialization
-    every selection pipeline pays at 100 TB, tiny next to the token
-    stream.  The span-dedup stats table shares the discipline
-    (:func:`_span_stats_table`).  Both cuts come from ONE aggregation
-    over the materialized copy; ``CAST(k AS DOUBLE)/n`` keeps the
-    identical binary64 fractions the oracle uses (see
-    corpus_perplexity_buckets / corpus_dsir_selected).
+    The per-doc scores table (doc_id, n_tokens, surprisal_bits,
+    avg_q20_per_token) is materialized: it feeds BOTH the percentile
+    cuts and the doc_id join, and without the materialization Catalyst
+    executed the whole scores subtree (~2.2 s at sf0.1) once per
+    consumer (three times before r8 — the r7 probe's 1.45× at 8× was
+    exactly this; zero ReusedExchange in the physical plan).  Scores
+    are doc-count-sized and 4 columns wide — the canonical
+    two-pass-quantile materialization every selection pipeline pays at
+    100 TB, tiny next to the token stream.  ``base`` is the caller's
+    materialized tokenized stream; scores use only doc_id/lang/ws, so
+    the with-text variant yields bit-identical scores.  The span-dedup
+    stats are read once (the doc_id join), so they are not materialized.
+    Both cuts come from ONE aggregation over the materialized copy;
+    ``CAST(k AS DOUBLE)/n`` keeps the identical binary64 fractions the
+    oracle uses (see corpus_perplexity_buckets / corpus_dsir_selected).
     """
+    from mongo_hadoop_spark.operators.spans import span_stats_from
     from mongo_hadoop_spark.operators.textstats import gopher_flags
 
     d = base.select("doc_id", "lang", "source")
     gph = gopher_flags(base).select("doc_id", "keep")
-    scores = _scores_table(spark, sf_dir, base)
-    spn = _span_stats_table(spark, sf_dir, base)
+    scores = materialize(
+        _ppl_dsir_scores_from(base).select(
+            "doc_id", "n_tokens", "surprisal_bits", "avg_q20_per_token"),
+        "funnel scores")
+    spn = span_stats_from(base).select("doc_id", "dup_frac")
     if percentile_accuracy is not None:
         acc = int(percentile_accuracy)
         cuts = scores.selectExpr(
@@ -441,7 +389,7 @@ def corpus_pretrain_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (see their own docstrings) — joined on doc_id, two 1-row threshold
     aggregates broadcast back, one final keyed aggregation.  The corpus
     is scanned and tokenized ONCE: the (doc_id, lang, source, text, ws)
-    stream is localCheckpoint-ed and all four stages read the
+    stream is materialized and all four stages read the
     materialized copy instead of re-scanning parquet and re-splitting
     text per stage (r6 verdict item 2 — at 100 TB a 4× scan is 4× the
     bill).  Null semantics: a document missing from a stage (e.g. zero
@@ -474,7 +422,7 @@ def _pretrain_manifest(spark: SparkSession, sf_dir: str,
 
     base = _tokenized_base(spark, sf_dir)
     d, gph, scores, spn, cuts = _funnel_inputs(
-        spark, sf_dir, base, percentile_accuracy=percentile_accuracy)
+        base, percentile_accuracy=percentile_accuracy)
     j = (d.join(gph, "doc_id", "left")
          .join(scores, "doc_id", "left")
          .join(spn, "doc_id", "left")
@@ -587,7 +535,7 @@ def corpus_pretrain_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mongo_hadoop_spark.operators.spans import SPAN_DROP_FRAC
 
     base = _tokenized_base(spark, sf_dir, with_text=True)
-    d, gph, scores, spn, cuts = _funnel_inputs(spark, sf_dir, base)
+    d, gph, scores, spn, cuts = _funnel_inputs(base)
     j = (d.join(gph, "doc_id", "left")
          .join(scores, "doc_id", "left")
          .join(spn, "doc_id", "left")
@@ -596,9 +544,9 @@ def corpus_pretrain_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("keep") & (F.col("surprisal_bits") <= F.col("t2"))
         & (F.col("dup_frac") <= F.lit(SPAN_DROP_FRAC))
         & (F.col("avg_q20_per_token") > F.col("q3")), F.lit(False))
-    selected = (j.where(sel)
-                .select("doc_id", "lang", "source", "n_tokens")
-                .localCheckpoint(eager=False))
+    selected = materialize(j.where(sel)
+                           .select("doc_id", "lang", "source", "n_tokens"),
+                           "token budget selection")
 
     _, w = _train(spark, sf_dir)
     seg_sizes = w.select(

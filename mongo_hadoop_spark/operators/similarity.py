@@ -24,40 +24,12 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from mongo_hadoop_spark.functions import dec_to_double, dot, norm2
 from mongo_hadoop_spark.guards import guard_quadratic
-from mongo_hadoop_spark.session import table
+from mongo_hadoop_spark.session import materialize, table
 
 TOP_K = 3
 QUERY_MOD = 100          # vec_id % QUERY_MOD == 0 → query set
 LSH_PLANES = 16
 EMB_DIM = 64
-
-def _trained_state(spark: SparkSession, sf_dir: str, tag: str, build):
-    """Lazy-checkpointed trained-state DataFrame, shared WITHIN one query
-    invocation only.
-
-    Why the checkpoint (r12 optimization, guide §2.4/§5): the
-    fixed-codebook trainers below are multi-stage subplans (broadcast
-    argmin + explode + two keyed aggregations over the training sample)
-    whose OUTPUT is tiny (≤ K and ≤ K × PQ_SUBSPACES rows), but Catalyst
-    inlines the subtree at every plan reference — ivf_pq_knn_fixed's
-    pre-r12 physical plan re-executed IVF training twice and PQ training
-    three times per run (32 parquet scans, zero ReusedExchange; ~1.0 s
-    and ~0.8 s per re-execution at sf0.1).  The lazy localCheckpoint
-    materializes the trained state ONCE inside the consuming query's own
-    action and every plan reference reads the ≤ K-row table.
-
-    Why per-invocation (r13, verdict item 1): r12 kept these in a
-    session-lifetime dictionary, so bench repeats 2-3 and sibling
-    queries read the first run's materialized blocks — best-of-N then
-    discarded the only honest timing.  ``invocation.memo`` scopes the
-    shared handle to one top-level query call: queries that reach the
-    same trainer through several helpers (ivf_pq_knn_fixed →
-    embedding_pq_codes_fixed + _pq_fixed_tables) still train once per
-    plan, but every invocation re-trains from parquet."""
-    from mongo_hadoop_spark.invocation import memo
-
-    return memo(("trained_state", sf_dir, tag),
-                lambda: build().localCheckpoint(eager=False))
 
 
 def knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -565,7 +537,7 @@ def _vector_classes(emb: DataFrame):
     2-4× per plan, but the collapse's two exchanges (the __vk partial
     aggregation and the join shuffle) are IDENTICAL subtrees at every
     reference, so Spark's ReuseExchange executes them once per query —
-    an explicit materialization (tried: per-invocation localCheckpoint)
+    an explicit materialization (tried: a lazy localCheckpoint)
     only added a column-pruning barrier and re-serialized the payload,
     measurably slower at every SF probed.
     """
@@ -703,10 +675,7 @@ def ivf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     The join is (cell × cell) — candidate volume is Σ cell², bounded by
     the histogram above, instead of |queries| × |corpus|."""
     emb = table(spark, sf_dir, "embeddings")
-    # localCheckpoint, not persist (r13): persist()'s CacheManager entry
-    # outlives the invocation and is plan-matched by later runs — the
-    # cross-invocation reuse the r12 judge ruled out
-    assign = ivf_assign(spark, sf_dir).localCheckpoint(eager=False)
+    assign = materialize(ivf_assign(spark, sf_dir), "ivf_knn cells")
     vecs = emb.select("vec_id", F.col("embedding").alias("v"),
                       F.sqrt(norm2(F.col("embedding"))).alias("vn")).join(assign, "vec_id")
     q = vecs.where(F.col("vec_id") % IVF_QUERY_MOD == 0).select(
@@ -1318,12 +1287,15 @@ def _pq_fixed_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds are deterministic id prefixes so DuckDB reproduces the
     training bit-for-bit (decimal(27,10) sums, argmin ties by cid).
 
-    The trained table (≤ PQ_K × PQ_SUBSPACES rows) is materialized once
-    per session via :func:`_trained_state` — every plan reference used
-    to re-execute the whole training subplan (see the cache docstring).
+    The trained table (≤ PQ_K × PQ_SUBSPACES rows) is materialized by
+    each call: a query trains once by calling this once and passing the
+    frame to every consumer (codes, ADC tables).  Catalyst inlines an
+    un-materialized subtree at every plan reference, so the multi-stage
+    training plan would otherwise run once per reference (the pre-r12
+    ivf_pq_knn_fixed plan trained PQ three times).
     """
-    return _trained_state(spark, sf_dir, "pq_fixed_codebook",
-                          lambda: _pq_fixed_codebook_build(spark, sf_dir))
+    return materialize(_pq_fixed_codebook_build(spark, sf_dir),
+                       "pq fixed codebook")
 
 
 def _pq_fixed_codebook_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1353,17 +1325,20 @@ def _pq_fixed_codebook_build(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.transform("pairs", lambda p: p["m"]).alias("cv")))
 
 
-def _pq_fixed_codebook_map(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _pq_fixed_codebook_map(refined: DataFrame) -> DataFrame:
     """Fold the trained fixed codebook into ONE row:
     ``cb: map<j, array<struct<cid, cv, cvn>>>`` — the broadcast side of
-    the row-local PQ code assignment (r13)."""
-    refined = _pq_fixed_codebook(spark, sf_dir)
+    the row-local PQ code assignment (r13).  An empty codebook (no
+    vec_id < PQ_K) folds to NO row, so the assignment emits no rows —
+    as the oracle's join against an empty codebook does — instead of
+    NULL codes."""
     return (refined.groupBy("cj")
             .agg(F.collect_list(F.struct(
                 F.col("cid"), F.col("cv"),
                 norm2(F.col("cv")).alias("cvn"))).alias("entries"))
             .agg(F.map_from_entries(
-                F.collect_list(F.struct("cj", "entries"))).alias("cb")))
+                F.collect_list(F.struct("cj", "entries"))).alias("cb"))
+            .where(F.size("cb") > 0))
 
 
 def _pq_rowlocal_base(emb: DataFrame, *extra: Column) -> DataFrame:
@@ -1394,6 +1369,13 @@ def _pq_rowlocal_code(j: int) -> Column:
 
 
 def embedding_pq_codes_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PQ codes against the fixed trained codebook; see
+    :func:`_pq_codes_fixed`."""
+    return _pq_codes_fixed(spark, sf_dir, _pq_fixed_codebook(spark, sf_dir))
+
+
+def _pq_codes_fixed(spark: SparkSession, sf_dir: str,
+                    refined: DataFrame) -> DataFrame:
     """PQ code assignment against the fixed trained codebook — the
     linear-at-scale variant of :func:`embedding_pq_codes`.
 
@@ -1409,7 +1391,7 @@ def embedding_pq_codes_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings").repartition(
         spark.sparkContext.defaultParallelism
     )
-    cb = _pq_fixed_codebook_map(spark, sf_dir)
+    cb = _pq_fixed_codebook_map(refined)
     return (_pq_rowlocal_base(emb)
             .join(F.broadcast(cb))
             .select("vec_id", *[
@@ -1482,16 +1464,17 @@ _ADC_FOLD = ("aggregate(array_sort(collect_list(struct(j, d))), "
              "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x.d)")
 
 
-def _pq_fixed_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-query ADC distance tables against the fixed codebook:
+def _pq_fixed_tables(spark: SparkSession, sf_dir: str,
+                     refined: DataFrame) -> DataFrame:
+    """Per-query ADC distance tables against the trained fixed codebook
+    ``refined`` (:func:`_pq_fixed_codebook`):
     (qid, j, cid, d), constant size PQ_FIXED_Q × PQ_SUBSPACES × ≤PQ_K —
     the broadcast side of every fixed-codebook compressed-domain scan."""
     emb = table(spark, sf_dir, "embeddings")
     qsub = (_pq_subvectors(emb.where(F.col("vec_id") < PQ_FIXED_Q))
             .select(F.col("vec_id").alias("qid"), F.col("j").alias("qj"),
                     F.col("sv").alias("qv"), F.col("svn").alias("qvn")))
-    refined = (_pq_fixed_codebook(spark, sf_dir)
-               .withColumn("cvn", norm2(F.col("cv"))))
+    refined = refined.withColumn("cvn", norm2(F.col("cv")))
     cell = (F.col("qvn") + F.col("cvn")
             - 2 * dot(F.col("qv"), F.col("cv")))
     return (qsub.join(F.broadcast(refined), F.col("qj") == F.col("cj"))
@@ -1507,10 +1490,11 @@ _PQ_FIXED_TABLES_SQL = f"""tables AS (
 )"""
 
 
-def _pq_fixed_qjm(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _pq_fixed_qjm(spark: SparkSession, sf_dir: str,
+                  refined: DataFrame) -> DataFrame:
     """Per-query ADC table slice: ``(qid, jm: map<j, map<cid, d>>)`` —
     PQ_SUBSPACES × ≤PQ_K cells per query, constant size."""
-    tables = _pq_fixed_tables(spark, sf_dir)
+    tables = _pq_fixed_tables(spark, sf_dir, refined)
     return (tables.groupBy("qid", "j")
             .agg(F.map_from_entries(
                 F.collect_list(F.struct("cid", "d"))).alias("m"))
@@ -1519,13 +1503,14 @@ def _pq_fixed_qjm(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.collect_list(F.struct("j", "m"))).alias("jm")))
 
 
-def _pq_fixed_query_slices(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _pq_fixed_query_slices(spark: SparkSession, sf_dir: str,
+                           refined: DataFrame) -> DataFrame:
     """Fold the constant-size ADC distance tables into ONE row:
     ``qs: array<struct<qid, jm>>`` — the broadcast side of the row-local
     compressed-domain scan (r13).  Exploding ``qs`` hands each (vector,
     query) candidate row ONLY that query's own table slice, so the
     Generate never copies the full all-queries table per row."""
-    return (_pq_fixed_qjm(spark, sf_dir)
+    return (_pq_fixed_qjm(spark, sf_dir, refined)
             .agg(F.collect_list(F.struct("qid", "jm")).alias("qs")))
 
 
@@ -1551,8 +1536,9 @@ def pq_knn_adc_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     billion-vector deployment actually runs.  Same ordered-fold total
     as :func:`pq_knn_adc` for cross-engine exactness.
     """
-    codes = embedding_pq_codes_fixed(spark, sf_dir)
-    qs = _pq_fixed_query_slices(spark, sf_dir)
+    refined = _pq_fixed_codebook(spark, sf_dir)
+    codes = _pq_codes_fixed(spark, sf_dir, refined)
+    qs = _pq_fixed_query_slices(spark, sf_dir, refined)
     codes_arr = F.array(*[F.col(f"code_{j}") for j in range(PQ_SUBSPACES)])
     # row-local ADC (r13): the distance tables fold to a one-row
     # broadcast array of per-query slices and each (query, vector)
@@ -1624,7 +1610,8 @@ def ivf_pq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.sparkContext.defaultParallelism
     )
     cells = ivf_assign(spark, sf_dir)
-    codes = embedding_pq_codes_fixed(spark, sf_dir)
+    refined = _pq_fixed_codebook(spark, sf_dir)
+    codes = _pq_codes_fixed(spark, sf_dir, refined)
     stack_args = ", ".join(f"{j}, code_{j}" for j in range(PQ_SUBSPACES))
     codes_long = codes.selectExpr(
         "vec_id", f"stack({PQ_SUBSPACES}, {stack_args}) AS (j, cid)")
@@ -1642,7 +1629,7 @@ def ivf_pq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
               .where(F.col("rn") <= IVF_PQ_NPROBE)
               .select("qid", "centroid_id"))
 
-    tables = _pq_fixed_tables(spark, sf_dir)
+    tables = _pq_fixed_tables(spark, sf_dir, refined)
     scored = (
         codes_long.join(cells, "vec_id")
         .join(F.broadcast(probes), "centroid_id")
@@ -2027,11 +2014,11 @@ def _ivf_fixed_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal(27,10) mean sums let DuckDB reproduce training bit-for-bit
     (argmin ties by cid) — same contract as ``_pq_fixed_codebook``.
 
-    The trained table (≤ IVF_FIXED_K rows) is materialized once per
-    session via :func:`_trained_state` — every plan reference used to
-    re-execute the whole training subplan (see the cache docstring)."""
-    return _trained_state(spark, sf_dir, "ivf_fixed_centroids",
-                          lambda: _ivf_fixed_centroids_build(spark, sf_dir))
+    The trained table (≤ IVF_FIXED_K rows) is materialized by each
+    call; a query that reads it twice calls this once and reuses the
+    frame (same reason as ``_pq_fixed_codebook``)."""
+    return materialize(_ivf_fixed_centroids_build(spark, sf_dir),
+                       "ivf fixed centroids")
 
 
 def _ivf_fixed_centroids_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2073,10 +2060,15 @@ def _fixed_cell_array(cents: DataFrame) -> DataFrame:
     lexicographic minimum as the old ``join(broadcast(cents)) →
     groupBy(vec_id).min(struct(d, cid))`` — bit-identical result (same
     folds, same tie-break), but the K-way row expansion, the N-row
-    vec_id shuffle and the join-back all disappear (guide §2.4)."""
-    return cents.agg(F.collect_list(F.struct(
+    vec_id shuffle and the join-back all disappear (guide §2.4).
+
+    An empty codebook (no vec_id < IVF_FIXED_K) folds to NO row, so the
+    assignment emits no rows — as the oracle's join against an empty
+    centroid table does — instead of a NULL ``centroid_id``."""
+    return (cents.agg(F.collect_list(F.struct(
         F.col("cid"), F.col("cv"), norm2(F.col("cv")).alias("cvn")
     )).alias("cs"))
+        .where(F.size("cs") > 0))
 
 
 def _rowlocal_cell(v: Column, vn: Column) -> Column:
@@ -2172,10 +2164,10 @@ def dedup_semantic_survivors_ivf_fixed(spark: SparkSession,
     cap documented in SCALE.md once cells outgrow memory."""
     emb = table(spark, sf_dir, "embeddings")
     # r13: class collapse + row-local cell assignment fused and
-    # checkpointed once per invocation (_semdedup_tagged) — the r12
-    # shape re-ran the collapse per plan reference and self-joined the
-    # cell assignment back by vec_id; all of that is one materialized
-    # table now, and the pair sides are filters over it.
+    # materialized once (_semdedup_tagged) — the r12 shape re-ran the
+    # collapse per plan reference and self-joined the cell assignment
+    # back by vec_id; all of that is one materialized table now, and the
+    # pair sides are filters over it.
     t = _semdedup_tagged(spark, sf_dir)
     member_dominated = (t.where(F.col("vec_id") != F.col("rep_id"))
                         .select("vec_id"))
@@ -2237,43 +2229,37 @@ def _semdedup_tagged(spark: SparkSession, sf_dir: str) -> DataFrame:
     the coalescer sizes partitions by bytes and cannot see downstream
     per-row cost.
 
-    Why the lazy per-invocation localCheckpoint: consumers reference
-    this table 2-4x per plan (member union, anchor ranking, both pair
-    sides) and column pruning makes each reference a DIFFERENT subtree,
-    so ReuseExchange does NOT deduplicate them — the un-checkpointed
-    form re-ran the md5+argmin collapse (two full shuffles of the
-    payload) once per reference (4 __vk exchanges in its capped plan
-    dump).  One materialization, every reference a filter over it
-    (guide §5; the same invocation scoping as :func:`_trained_state`,
-    so bench repeats re-collapse from parquet)."""
-    from mongo_hadoop_spark.invocation import memo
+    Why materialized: consumers reference this table 2-4x per plan
+    (member union, anchor ranking, both pair sides) and column pruning
+    makes each reference a DIFFERENT subtree, so ReuseExchange does NOT
+    deduplicate them — the un-materialized form re-ran the md5+argmin
+    collapse (two full shuffles of the payload) once per reference (4
+    __vk exchanges in its capped plan dump).  One materialization,
+    every reference a filter over it (guide §5)."""
     from mongo_hadoop_spark.session import spread
 
-    def build() -> DataFrame:
-        emb = spread(spark, table(spark, sf_dir, "embeddings"))
-        carr = _fixed_cell_array(_ivf_fixed_centroids(spark, sf_dir))
-        keyed = (emb.select(
-            "vec_id", "embedding",
-            F.md5(F.to_json(F.struct(F.col("embedding")))).alias("__vk"),
-            norm2(F.col("embedding")).alias("vn"))
-            .join(F.broadcast(carr))
-            .select("vec_id", "embedding", "__vk",
-                    F.sqrt(F.col("vn")).alias("nrm"),
-                    _rowlocal_cell(F.col("embedding"), F.col("vn"))
-                    .alias("centroid_id")))
-        rep_ids = keyed.groupBy("__vk").agg(
-            F.min("vec_id").alias("rep_id"))
-        out = (keyed.join(rep_ids, "__vk")
-               .select("vec_id", "embedding", "rep_id", "nrm",
-                       "centroid_id")
-               .localCheckpoint(eager=False))
-        # carry the source-size breadcrumb so consumers can `spread`
-        # heavy pair work off the (byte-coalesced) checkpoint partitions
-        out._mhs_src_bytes = getattr(
-            table(spark, sf_dir, "embeddings"), "_mhs_src_bytes", None)
-        return out
-
-    return memo(("semdedup_tagged", sf_dir), build)
+    emb = spread(spark, table(spark, sf_dir, "embeddings"))
+    carr = _fixed_cell_array(_ivf_fixed_centroids(spark, sf_dir))
+    keyed = (emb.select(
+        "vec_id", "embedding",
+        F.md5(F.to_json(F.struct(F.col("embedding")))).alias("__vk"),
+        norm2(F.col("embedding")).alias("vn"))
+        .join(F.broadcast(carr))
+        .select("vec_id", "embedding", "__vk",
+                F.sqrt(F.col("vn")).alias("nrm"),
+                _rowlocal_cell(F.col("embedding"), F.col("vn"))
+                .alias("centroid_id")))
+    rep_ids = keyed.groupBy("__vk").agg(
+        F.min("vec_id").alias("rep_id"))
+    out = materialize(keyed.join(rep_ids, "__vk")
+                      .select("vec_id", "embedding", "rep_id", "nrm",
+                              "centroid_id"),
+                      "semdedup tagged vectors")
+    # carry the source-size breadcrumb so consumers can `spread`
+    # heavy pair work off the (byte-coalesced) checkpoint partitions
+    out._mhs_src_bytes = getattr(
+        table(spark, sf_dir, "embeddings"), "_mhs_src_bytes", None)
+    return out
 
 
 #: per-cell anchor budget for the capped SemDeDup composition — the
@@ -2316,7 +2302,7 @@ def dedup_semantic_survivors_ivf_capped(spark: SparkSession,
 
     emb = table(spark, sf_dir, "embeddings")
     # r13: class collapse + row-local cell assignment fused and
-    # checkpointed once per invocation (_semdedup_tagged)
+    # materialized once (_semdedup_tagged)
     t = _semdedup_tagged(spark, sf_dir)
     member_dominated = (t.where(F.col("vec_id") != F.col("rep_id"))
                         .select("vec_id"))
@@ -2461,11 +2447,13 @@ def ivf_pq_knn_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings").repartition(
         spark.sparkContext.defaultParallelism
     )
-    # ONE trained-centroid subtree feeds both the cell assignment and
-    # the probe ranking (r10 review finding: calling ivf_assign_fixed
-    # here rebuilt the whole Lloyd-training subplan a second time)
-    cents = (_ivf_fixed_centroids(spark, sf_dir)
-             .withColumn("cvn", norm2(F.col("cv"))))
+    # ONE trained-centroid table feeds both the cell assignment and the
+    # probe ranking, and ONE trained codebook both the ADC tables and
+    # the codes (r10 review finding: calling ivf_assign_fixed here
+    # rebuilt the whole Lloyd-training subplan a second time)
+    trained = _ivf_fixed_centroids(spark, sf_dir)
+    refined = _pq_fixed_codebook(spark, sf_dir)
+    cents = trained.withColumn("cvn", norm2(F.col("cv")))
     q = emb.where(F.col("vec_id") < PQ_FIXED_Q).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"),
         norm2(F.col("embedding")).alias("qvn"))
@@ -2480,7 +2468,7 @@ def ivf_pq_knn_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # probe sets INVERTED and folded to one broadcast row:
     # map<centroid_id, array<struct<qid, jm>>> — each probed cell maps
     # to the queries probing it, each carrying its own ADC table slice
-    pm = (probes.join(_pq_fixed_qjm(spark, sf_dir), "qid")
+    pm = (probes.join(_pq_fixed_qjm(spark, sf_dir, refined), "qid")
           .groupBy("centroid_id")
           .agg(F.collect_list(F.struct("qid", "jm")).alias("qs"))
           .agg(F.map_from_entries(
@@ -2496,8 +2484,8 @@ def ivf_pq_knn_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The r12 shape ran three emb scans (codes, cells, q), a vec_id
     # shuffle join of two N-row tables, and a N×8×Q-row groupBy — all
     # deleted; distances, probe sets and fold order are bit-identical.
-    carr = _fixed_cell_array(_ivf_fixed_centroids(spark, sf_dir))
-    cb = _pq_fixed_codebook_map(spark, sf_dir)
+    carr = _fixed_cell_array(trained)
+    cb = _pq_fixed_codebook_map(refined)
     base = _pq_rowlocal_base(emb, F.col("embedding").alias("v"),
                              norm2(F.col("embedding")).alias("vn"))
     row = (base.join(F.broadcast(carr)).join(F.broadcast(cb))

@@ -46,6 +46,8 @@ from typing import Any
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from mongo_hadoop_spark.session import materialize
+
 # Percentile execution mode for $median/$percentile/$bucketAuto.
 # ``None`` → exact discrete semantics (``percentile_disc``: deterministic,
 # cross-engine bit-checkable, but the aggregation buffer holds every input
@@ -3853,7 +3855,7 @@ def _graph_lookup_fixpoint(df: DataFrame, foreign: DataFrame, fstruct,
     """Eager BFS-to-fixpoint half of $graphLookup (no maxDepth).
 
     Returns ``(src, visited)`` where ``src`` carries a STABLE ``__gid``
-    (localCheckpoint-ed — ``monotonically_increasing_id`` is only
+    (materialized — ``monotonically_increasing_id`` is only
     consistent within one job, and this loop runs many) and ``visited``
     is the union of per-level hit sets (__gid, __doc, __depth, __next).
 
@@ -3861,7 +3863,7 @@ def _graph_lookup_fixpoint(df: DataFrame, foreign: DataFrame, fstruct,
     on the connectTo field) plus one left-anti join against the set of
     (row, value) pairs already expanded — so every value is expanded at
     most once per source row and cyclic graphs terminate.  Levels are
-    localCheckpoint-ed (lineage stays flat; the expanded-set union
+    materialized (lineage stays flat; the expanded-set union
     reads materialized partitions, never recomputes).  The only driver
     action per level is the empty-frontier convergence check — the
     Pregel vote-to-halt scalar, same contract as the CC superstep loop.
@@ -3872,8 +3874,8 @@ def _graph_lookup_fixpoint(df: DataFrame, foreign: DataFrame, fstruct,
 
     max_levels = int(os.environ.get(GRAPH_LOOKUP_MAX_LEVELS_ENV,
                                     GRAPH_LOOKUP_MAX_LEVELS))
-    src = df.withColumn("__gid", F.monotonically_increasing_id()) \
-            .localCheckpoint()
+    src = materialize(df.withColumn("__gid", F.monotonically_increasing_id()),
+                      "$graphLookup source ids", eager=True)
     # r12 optimization (guide §1.5, §2.4): ONE driver action per level —
     # each level checkpoints only its hit set, with the hit count riding
     # the checkpoint's own materialization pass (Observation); the next
@@ -3891,10 +3893,11 @@ def _graph_lookup_fixpoint(df: DataFrame, foreign: DataFrame, fstruct,
     # hit set, and a level with zero hits cannot seed a frontier — the
     # observed hit count is the vote-to-halt scalar.
     obs0 = Observation()
-    f0 = (src.select("__gid", expr_to_col(start_with).alias("__val"))
-          .where(F.col("__val").isNotNull()).distinct()
-          .observe(obs0, F.count(F.lit(1)).alias("n"))
-          .localCheckpoint())
+    f0 = materialize(
+        src.select("__gid", expr_to_col(start_with).alias("__val"))
+        .where(F.col("__val").isNotNull()).distinct()
+        .observe(obs0, F.count(F.lit(1)).alias("n")),
+        "$graphLookup start frontier", eager=True)
     frontier = f0
     seen = f0            # accumulated expanded (gid, val) set — r13: one
     #                      running union, not a per-level rebuild
@@ -3915,12 +3918,13 @@ def _graph_lookup_fixpoint(df: DataFrame, foreign: DataFrame, fstruct,
                 f"per-level fixpoint loop (override with "
                 f"{GRAPH_LOOKUP_MAX_LEVELS_ENV} or pass maxDepth)")
         obs = Observation()
-        hits = (frontier.join(foreign, frontier["__val"] == foreign[ct])
-                .select("__gid", fstruct.alias("__doc"),
-                        F.lit(lvl).cast("long").alias("__depth"),
-                        F.col(cf).alias("__next"))
-                .observe(obs, F.count(F.lit(1)).alias("n"))
-                .localCheckpoint())
+        hits = materialize(
+            frontier.join(foreign, frontier["__val"] == foreign[ct])
+            .select("__gid", fstruct.alias("__doc"),
+                    F.lit(lvl).cast("long").alias("__depth"),
+                    F.col(cf).alias("__next"))
+            .observe(obs, F.count(F.lit(1)).alias("n")),
+            f"$graphLookup level {lvl}", eager=True)
         levels.append(hits)
         n_live = obs.get["n"]
         if n_live == 0:
@@ -3939,7 +3943,8 @@ def _graph_lookup_fixpoint(df: DataFrame, foreign: DataFrame, fstruct,
                     .where(F.col("__val").isNotNull()))
         frontier = (new_vals.distinct()
                     .join(seen, ["__gid", "__val"], "left_anti"))
-        seen = seen.unionAll(new_vals).localCheckpoint(eager=False)
+        seen = materialize(seen.unionAll(new_vals),
+                           f"$graphLookup seen set {lvl}")
         lvl += 1
     if not levels:
         # nothing matched anywhere: empty visited with the right schema
@@ -3969,7 +3974,7 @@ def _stage_graph_lookup(df: DataFrame, spec: dict,
     already expanded for that source row (so cyclic graphs terminate —
     the server likewise tracks visited documents,
     ref docs/aggregation $graphLookup "handles cyclic graphs"), and
-    each level's output is localCheckpoint-ed to keep lineage flat.
+    each level's output is materialized to keep lineage flat.
     The loop ends when the frontier is empty; a safety cap of
     ``GRAPH_LOOKUP_MAX_LEVELS`` levels (env-overridable) refuses graphs
     whose BFS depth makes a per-level driver loop the wrong tool.
@@ -4240,62 +4245,54 @@ def _stage_merge(df: DataFrame, spec, store_path: str | None,
         if when_not == "fail":
             # pin df: count and journal replay must see the SAME rows
             # even when the source is non-deterministic
-            df = df.persist()
-        try:
-            n_incoming = df.count() if when_not == "fail" else None
-            df.foreachPartition(_UpdateJournalTask(
-                spool, coll,
-                _merge_builder(when_matched, when_not == "insert", on_cols,
-                               let=spec.get("let"))))
-            stats = commit_updates_live(spool, coll, target)
-            if when_not == "fail" and stats["matched"] < n_incoming:
-                raise ValueError(
-                    f"$merge whenNotMatched:fail — "
-                    f"{n_incoming - stats['matched']} incoming documents "
-                    "matched no existing document (matched docs were merged)")
-        finally:
-            if when_not == "fail":
-                df.unpersist()
+            df = materialize(df, "$merge input")
+        n_incoming = df.count() if when_not == "fail" else None
+        df.foreachPartition(_UpdateJournalTask(
+            spool, coll,
+            _merge_builder(when_matched, when_not == "insert", on_cols,
+                           let=spec.get("let"))))
+        stats = commit_updates_live(spool, coll, target)
+        if when_not == "fail" and stats["matched"] < n_incoming:
+            raise ValueError(
+                f"$merge whenNotMatched:fail — "
+                f"{n_incoming - stats['matched']} incoming documents "
+                "matched no existing document (matched docs were merged)")
         return df
     if when_matched == "fail":
         from mongo_hadoop_spark.store import DocumentStore
 
-        df = df.persist()   # count and replay must see the SAME rows
-        try:
-            n_incoming = df.count()
-            before = DocumentStore(store_path).collection(coll).count()
-            write_documents(df, store_path, coll, mode="update",
-                            update_builder=_merge_builder("keepExisting",
-                                                          True, on_cols))
-            apply_pending_updates(store_path, coll)
-            inserted = (DocumentStore(store_path).collection(coll).count()
-                        - before)
-            if inserted < n_incoming:
-                raise ValueError(
-                    f"$merge whenMatched:fail — {n_incoming - inserted} "
-                    "incoming documents matched existing ones (existing "
-                    "docs unchanged)")
-        finally:
-            df.unpersist()
+        # count and replay must see the SAME rows
+        df = materialize(df, "$merge input")
+        n_incoming = df.count()
+        before = DocumentStore(store_path).collection(coll).count()
+        write_documents(df, store_path, coll, mode="update",
+                        update_builder=_merge_builder("keepExisting",
+                                                      True, on_cols))
+        apply_pending_updates(store_path, coll)
+        inserted = (DocumentStore(store_path).collection(coll).count()
+                    - before)
+        if inserted < n_incoming:
+            raise ValueError(
+                f"$merge whenMatched:fail — {n_incoming - inserted} "
+                "incoming documents matched existing ones (existing "
+                "docs unchanged)")
         return df
     if when_not == "fail":
         # server semantics: error when an incoming doc matches NOTHING;
         # matched docs are merged first (count-based detection like the
         # whenMatched:fail path — the upsert half never runs)
-        df = df.persist()   # count and replay must see the SAME rows
-        try:
-            n_incoming = df.count()
-            stats = write_documents(
-                df, store_path, coll, mode="update",
-                update_builder=_merge_builder(when_matched, False, on_cols,
-                                              let=spec.get("let")))
-            if stats["matched"] < n_incoming:
-                raise ValueError(
-                    f"$merge whenNotMatched:fail — "
-                    f"{n_incoming - stats['matched']} incoming documents "
-                    "matched no existing document (matched docs were merged)")
-        finally:
-            df.unpersist()
+        # count and replay must see the SAME rows
+        df = materialize(df, "$merge input")
+        n_incoming = df.count()
+        stats = write_documents(
+            df, store_path, coll, mode="update",
+            update_builder=_merge_builder(when_matched, False, on_cols,
+                                          let=spec.get("let")))
+        if stats["matched"] < n_incoming:
+            raise ValueError(
+                f"$merge whenNotMatched:fail — "
+                f"{n_incoming - stats['matched']} incoming documents "
+                "matched no existing document (matched docs were merged)")
         return df
     write_documents(df, store_path, coll, mode="update",
                     update_builder=_merge_builder(when_matched,

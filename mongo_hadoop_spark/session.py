@@ -132,6 +132,40 @@ def table(spark: SparkSession, sf_dir: str, name: str):
     return df
 
 
+def materialize(df, name: str, eager: bool = False):
+    """The package's one materialization point: ``df.localCheckpoint``
+    under the Spark job description ``name``.
+
+    Policy.  Materialize only what a consumer reads more than once
+    (Catalyst inlines a subtree at every plan reference, and column
+    pruning gives each reference a different subtree, so ReuseExchange
+    does not deduplicate them) or what a loop would otherwise re-execute
+    every round (lineage truncation).  Always ``localCheckpoint``, never
+    ``persist()``/``cache()``: a persisted deterministic plan registers
+    in the session CacheManager and is silently served to later queries
+    that build the same plan, so a repeated run would read the previous
+    run's blocks instead of computing.  A local checkpoint belongs to
+    the RDD this call builds; its blocks are freed once the returned
+    DataFrame is unreachable.  The trade: local checkpoint blocks live
+    on executor storage and are not recomputable, so losing an executor
+    loses them.
+
+    ``eager=False`` defers the final stage to the consumer's first
+    action; the upstream shuffle stages still run at call time under
+    AQE.  ``eager=True`` runs the whole plan now; the loops whose
+    convergence scalar rides an ``Observation`` on the checkpoint pass
+    need it.  Either way the jobs the call itself triggers carry
+    ``name`` as their description, and the caller's description is
+    restored afterwards."""
+    sc = df.sparkSession.sparkContext
+    old = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(name)
+    try:
+        return df.localCheckpoint(eager=eager)
+    finally:
+        sc.setLocalProperty("spark.job.description", old)
+
+
 def spread(spark: SparkSession, df):
     """Parallelism repair for unsplittable local inputs (optimization
     guide §2.5 "input skew: one huge unsplittable file … repartition

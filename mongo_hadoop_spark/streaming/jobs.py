@@ -534,9 +534,11 @@ def stream_crawl_classify(seen_index: dict, out_path: str):
     pure streaming), so it runs batch-side per trigger via foreachBatch;
     a document's verdict depends only on its bytes and the seen index,
     never on batch boundaries, so stream ≡ batch holds by construction
-    (pinned in tests/test_streaming.py).  At cluster scale the index
-    frames are persisted once and every micro-batch probes them — the
-    same read-mostly broadcast/probe shape the batch operator uses.
+    (pinned in tests/test_streaming.py).  The index frames are
+    materialized once and every micro-batch probes them — the same
+    read-mostly broadcast/probe shape the batch operator uses (see
+    :func:`~.operators.dedup.build_seen_index` for what an executor loss
+    costs).
 
     Usage::
 

@@ -60,35 +60,6 @@ def test_fused_scores_match_standalone(spark):
         assert f["avg_q20_per_token"] == dsr[doc_id]["avg_q20_per_token"]
 
 
-def test_tokenized_base_scoped_per_invocation(spark):
-    """r13 (verdict item 1): the tokenized-stream checkpoint is shared
-    WITHIN one query invocation (same object → one materialization per
-    plan) and NEVER across invocations (each top-level call re-tokenizes
-    from parquet — no session-lifetime memo)."""
-    from mongo_hadoop_spark.invocation import scoped
-    from mongo_hadoop_spark.operators.pipeline import _tokenized_base
-
-    grabbed = []
-
-    @scoped
-    def one_invocation(spark, sf_dir):
-        a = _tokenized_base(spark, sf_dir)
-        b = _tokenized_base(spark, sf_dir)
-        assert a is b  # within-invocation: one shared checkpoint
-        c = _tokenized_base(spark, sf_dir, with_text=True)
-        assert c is not a and "text" in c.columns and "text" not in a.columns
-        grabbed.append(a)
-        return a
-
-    one_invocation(spark, SF_SMOKE)
-    one_invocation(spark, SF_SMOKE)
-    assert grabbed[0] is not grabbed[1]  # across invocations: fresh plan
-    # outside any invocation scope: plain builds, no sharing
-    x = _tokenized_base(spark, SF_SMOKE)
-    y = _tokenized_base(spark, SF_SMOKE)
-    assert x is not y
-
-
 def test_approx_manifest_matches_exact(spark):
     """The production threshold-cut mode (approx_percentile cuts,
     corpus_pretrain_manifest_approx) must reproduce the exact manifest

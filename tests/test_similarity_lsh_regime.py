@@ -271,3 +271,28 @@ def test_cell_density_overflow_signal(spark, tmp_path):
     assert {(r.centroid_id, r.n_classes, r.overflow) for r in cl} == \
         {(r.centroid_id, r.n_classes, r.overflow) for r in plain}
     assert sum(r.n_rows for r in cl) == 2 * n_base
+
+
+def test_ivf_pq_knn_fixed_trains_each_state_once(spark, monkeypatch):
+    """A direct library call (no registry wrapper) trains the coarse
+    centroids and the PQ codebook once each, and a second call trains
+    them again (no state carried between calls)."""
+    from conftest import SF_SMOKE
+    from mongo_hadoop_spark.operators import similarity
+
+    calls = {"ivf": 0, "pq": 0}
+
+    def counted(key, build):
+        def wrapper(*args):
+            calls[key] += 1
+            return build(*args)
+        return wrapper
+
+    monkeypatch.setattr(similarity, "_ivf_fixed_centroids_build", counted(
+        "ivf", similarity._ivf_fixed_centroids_build))
+    monkeypatch.setattr(similarity, "_pq_fixed_codebook_build", counted(
+        "pq", similarity._pq_fixed_codebook_build))
+    similarity.ivf_pq_knn_fixed(spark, SF_SMOKE)
+    assert calls == {"ivf": 1, "pq": 1}
+    similarity.ivf_pq_knn_fixed(spark, SF_SMOKE)
+    assert calls == {"ivf": 2, "pq": 2}

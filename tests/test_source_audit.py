@@ -11,6 +11,7 @@ story rests on, enforced as tests instead of round-time grep.
   1x1xp...x1 frame chain) - never a real cartesian.
 - the segment format (temp names, segment globs, sidecar suffixes, codec
   openers) is spelled only in store.py and bsonio.py.
+- every materialization goes through session.materialize.
 """
 
 from __future__ import annotations
@@ -84,4 +85,24 @@ def test_segment_format_only_in_store_and_bsonio():
         for i, line in enumerate(p.read_text().splitlines(), 1):
             if pat.search(line):
                 bad.append(f"{p.name}:{i}: {line.strip()[:80]}")
+    assert not bad, bad
+
+
+def test_materialization_only_in_session():
+    # session.materialize is the package's one materialization point:
+    # every checkpoint, persist or cache call sits inside its body
+    import ast
+
+    pat = re.compile(r"\.localCheckpoint\(|\.persist\(|\.cache\(\)|\.checkpoint\(")
+    session = SRC / "session.py"
+    fn = next(n for n in ast.parse(session.read_text()).body
+              if isinstance(n, ast.FunctionDef) and n.name == "materialize")
+    bad = []
+    for p in _source_files():
+        for i, line in enumerate(p.read_text().splitlines(), 1):
+            if not pat.search(line):
+                continue
+            if p == session and fn.lineno <= i <= fn.end_lineno:
+                continue
+            bad.append(f"{p.name}:{i}: {line.strip()[:80]}")
     assert not bad, bad

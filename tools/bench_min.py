@@ -13,7 +13,7 @@ Usage:
         > BENCH_IDLE_MIN_r12.json
 
 The output carries the same shape bench_compare consumes ("value",
-"queries", "rows", subset subtotals recomputed from the min timings)
+"queries", "rows", the r8 subset subtotal recomputed from the min timings)
 plus provenance: every source file with its start/end loads and total.
 Row counts must agree across runs (a row drift is a semantics change,
 not weather) — disagreement is a hard error.
@@ -67,18 +67,16 @@ def fold(paths: list[str]) -> dict:
                      "load_avg_1m_end": r.get("load_avg_1m_end")}
                     for p, r in runs],
     }
-    # recompute the cross-round subset subtotals from the min timings
-    # (membership comes from bench.py's own subset frozensets, the same
+    # recompute the r8 subset subtotal (the BASELINE anchor) from the
+    # min timings (membership comes from bench.py's own R8_SET, the same
     # source the per-run files used)
     import os
     sys.path.insert(0, os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))))
     import bench
-    for tag, subset in (("r8", bench.R8_SET), ("r9", bench.R9_SET),
-                        ("r10", bench.R10_SET), ("r11", bench.R11_SET)):
-        out[f"{tag}_subset_total_sec"] = round(
-            sum(v for k, v in mins.items() if k in subset), 3)
-        out[f"{tag}_subset_n"] = len(subset)
+    out["r8_subset_total_sec"] = round(
+        sum(v for k, v in mins.items() if k in bench.R8_SET), 3)
+    out["r8_subset_n"] = len(bench.R8_SET)
     return out
 
 
